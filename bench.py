@@ -141,11 +141,7 @@ def run_extraction(
     # materialization barrier breaks scan→extract pipelining — measured
     # +45% wall at 32 cores. Relational queries keep AQE on.
     aqe_prev = spark.conf.get("spark.sql.adaptive.enabled")
-    # SPARK_GRAFT_EXTRACT_AQE=1 keeps AQE ON for the extraction job
-    # (the --salted-aqe A/B measures whether AQE partition coalescing
-    # helps or hurts the salted exchange)
-    if os.environ.get("SPARK_GRAFT_EXTRACT_AQE") != "1":
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
         return _run_extraction_timed(
             spark, corpus, mode, shard, repeats, buckets, salt_partitions
@@ -226,59 +222,6 @@ def run_queries(
     return out, builds
 
 
-def _stages_since(spark, since: float) -> list[dict]:
-    """Completed-stage metrics (UI REST status store) for stages
-    submitted after ``since`` (time.time() epoch seconds) — the
-    per-stage split the salted-mode profiling reads: where does the
-    wall go between the scan+shuffle-write map stage and the
-    shuffle-read+extraction result stage."""
-    import datetime
-    import urllib.request
-
-    sc = spark.sparkContext
-    base = sc.uiWebUrl
-    if not base:
-        return []
-    url = f"{base}/api/v1/applications/{sc.applicationId}/stages?status=complete"
-    with urllib.request.urlopen(url, timeout=10) as r:
-        stages = json.load(r)
-    out = []
-    for s in stages:
-        sub = s.get("submissionTime")
-        if not sub:
-            continue
-        ts = (
-            datetime.datetime.strptime(sub[:23], "%Y-%m-%dT%H:%M:%S.%f")
-            .replace(tzinfo=datetime.timezone.utc)
-            .timestamp()
-        )
-        if ts < since - 1:
-            continue
-        comp = s.get("completionTime")
-        tc = (
-            datetime.datetime.strptime(comp[:23], "%Y-%m-%dT%H:%M:%S.%f")
-            .replace(tzinfo=datetime.timezone.utc)
-            .timestamp()
-            if comp
-            else None
-        )
-        out.append(
-            {
-                "stage": s["stageId"],
-                "tasks": s.get("numCompleteTasks"),
-                "wall_sec": round(tc - ts, 3) if tc else None,
-                "executor_run_sec": round(s.get("executorRunTime", 0) / 1e3, 2),
-                "executor_cpu_sec": round(s.get("executorCpuTime", 0) / 1e9, 2),
-                "input_bytes": s.get("inputBytes", 0),
-                "shuffle_write_bytes": s.get("shuffleWriteBytes", 0),
-                "shuffle_write_sec": round(s.get("shuffleWriteTime", 0) / 1e9, 2),
-                "shuffle_read_bytes": s.get("shuffleReadBytes", 0),
-                "fetch_wait_sec": round(s.get("shuffleFetchWaitTime", 0) / 1e3, 2),
-            }
-        )
-    return sorted(out, key=lambda s: s["stage"])
-
-
 def bench_once(
     cores: int,
     extract_only: bool = False,
@@ -287,7 +230,6 @@ def bench_once(
     mode: str = "scan-aligned",
     shard: tuple[int, int] | None = None,
     corpus_path: str | None = None,
-    profile_stages: bool = False,
     buckets: int = 64,
     salt_partitions: int | None = None,
 ) -> dict:
@@ -297,14 +239,8 @@ def bench_once(
         app_name=f"bench_c{cores}",
         cores=cores,
         shuffle_partitions=max(cores, 8),
-        extra_conf=(
-            {"spark.ui.enabled": "true", "spark.ui.port": "0"}
-            if profile_stages
-            else None
-        ),
     )
     sf = sf if sf is not None else _sf_of_dir(SF_DIR)
-    t_mark = time.time()
     ext_sec, n_docs = run_extraction(
         spark,
         sf,
@@ -324,12 +260,6 @@ def bench_once(
         "n_docs": n_docs,
         "docs_per_sec": round(n_docs / ext_sec, 1),
     }
-    if profile_stages:
-        # keep only the LAST timed run's stages: take the final
-        # (2 + repeats) stages after warmups — scan/write + read/extract
-        # per execution; simplest robust filter is wall-clock recency
-        stages = _stages_since(spark, t_mark)
-        result["stages"] = stages[-2:] if len(stages) >= 2 else stages
     if not extract_only:
         result["queries"], result["build_sec"] = run_queries(spark, SF_DIR)
     spark.stop()
@@ -380,16 +310,6 @@ def main() -> None:
     os.environ.setdefault("SPARK_GRAFT_TMPFS", "1")
     ap = argparse.ArgumentParser()
     ap.add_argument("--scaling", action="store_true", help="two-parallelism scaling run")
-    ap.add_argument(
-        "--salted-tuning",
-        action="store_true",
-        help="A/B the salted mode's shuffle codec (lz4 vs zstd) at full cores",
-    )
-    ap.add_argument(
-        "--salted-aqe",
-        action="store_true",
-        help="A/B AQE partition coalescing on the salted exchange at full cores",
-    )
     ap.add_argument("--cores", type=int, default=None)
     ap.add_argument("--extract-only", action="store_true")
     ap.add_argument("--bench-sf", type=float, default=None)
@@ -397,14 +317,6 @@ def main() -> None:
     ap.add_argument("--mode", default="scan-aligned", choices=["salted", "scan-aligned"])
     ap.add_argument("--shard", default=None, help="i/k: run only url-hash shard i of k")
     ap.add_argument("--corpus-path", default=None, help="read this parquet instead of the cached corpus")
-    ap.add_argument(
-        "--salted-profile",
-        action="store_true",
-        help="per-stage split of the salted exchange at local[8] vs local[32] "
-        "(VERDICT r03 item 5): where does the wall go — scan+shuffle-write "
-        "vs shuffle-read+extraction — and how does each side scale",
-    )
-    ap.add_argument("--profile-stages", action="store_true", help=argparse.SUPPRESS)
     ap.add_argument("--buckets", type=int, default=64)
     ap.add_argument(
         "--salt-partitions",
@@ -414,94 +326,6 @@ def main() -> None:
         "(resolve with extract_job.salt_width)",
     )
     args = ap.parse_args()
-
-    if args.salted_profile:
-        profile_sf = float(os.environ.get("SPARK_GRAFT_SCALING_SF", "1.6"))
-        rounds = int(os.environ.get("SPARK_GRAFT_PROFILE_ROUNDS", "2"))
-        bucket_grid = [
-            int(b) for b in os.environ.get("SPARK_GRAFT_PROFILE_BUCKETS", "64").split(",")
-        ]
-        from oct_report_ocr_spark.synth.gen_corpus import ensure_corpus
-
-        corpus_disk = ensure_corpus(os.path.join(REPO, ".cache"), profile_sf)
-        shm_root = "/dev/shm/spark-graft" if os.path.isdir("/dev/shm") else os.path.join(REPO, ".cache")
-        corpus_shm = os.path.join(shm_root, os.path.basename(os.path.dirname(corpus_disk)), "documents_html.parquet")
-        if not os.path.exists(corpus_shm):
-            import shutil
-
-            os.makedirs(os.path.dirname(corpus_shm), exist_ok=True)
-            shutil.copy(corpus_disk, corpus_shm)
-        prof: list[dict] = []
-        for _ in range(rounds):
-            for cores in (8, 32):  # interleaved against host CPU drift
-                for nb in bucket_grid:
-                    pin = ["taskset", "-c", f"0-{cores - 1}"]
-                    env = {**os.environ, "SPARK_GRAFT_DRIVER_MEM": f"{max(4, cores // 2)}g"}
-                    out = subprocess.run(
-                        [
-                            *pin, sys.executable, __file__, "--cores", str(cores),
-                            "--extract-only", "--bench-sf", str(profile_sf),
-                            "--repeats", "1", "--mode", "salted",
-                            # the grid varies the EXCHANGE width; sink
-                            # buckets stay 64 (resume-valid identity)
-                            "--profile-stages", "--buckets", "64",
-                            "--salt-partitions", str(nb),
-                            "--corpus-path", corpus_shm,
-                        ],
-                        capture_output=True, text=True, check=True, cwd=REPO, env=env,
-                    )
-                    line = [ln for ln in out.stdout.strip().splitlines() if ln.startswith("{")][-1]
-                    prof.append(json.loads(line))
-        print(json.dumps({"salted_profile": prof}))
-        return
-
-    if args.salted_aqe:
-        tuning_sf = float(os.environ.get("SPARK_GRAFT_TUNING_SF", "0.4"))
-        from oct_report_ocr_spark.synth.gen_corpus import ensure_corpus
-
-        corpus = ensure_corpus(os.path.join(REPO, ".cache"), tuning_sf)
-        results = {}
-        for label, env_extra in (("aqe_off", {}), ("aqe_on", {"SPARK_GRAFT_EXTRACT_AQE": "1"})):
-            env = {**os.environ, **env_extra}
-            out = subprocess.run(
-                [
-                    sys.executable, __file__, "--cores", str(CPUS),
-                    "--extract-only", "--bench-sf", str(tuning_sf),
-                    "--repeats", "3", "--mode", "salted",
-                    "--corpus-path", corpus,
-                ],
-                capture_output=True, text=True, check=True, cwd=REPO, env=env,
-            )
-            line = [ln for ln in out.stdout.strip().splitlines() if ln.startswith("{")][-1]
-            results[label] = json.loads(line)
-        print(json.dumps({"salted_aqe": results}))
-        return
-
-    if args.salted_tuning:
-        # VERDICT r01 item 6: measure shuffle compression codecs on the
-        # salted path (the full-payload exchange is its dominant cost).
-        # Each codec runs in its own subprocess/JVM so the codec config
-        # is actually applied, on the same RAM-resident corpus.
-        tuning_sf = float(os.environ.get("SPARK_GRAFT_TUNING_SF", "0.4"))
-        from oct_report_ocr_spark.synth.gen_corpus import ensure_corpus
-
-        corpus = ensure_corpus(os.path.join(REPO, ".cache"), tuning_sf)
-        results = {}
-        for codec in ("lz4", "zstd"):
-            env = {**os.environ, "SPARK_GRAFT_IO_CODEC": codec}
-            out = subprocess.run(
-                [
-                    sys.executable, __file__, "--cores", str(CPUS),
-                    "--extract-only", "--bench-sf", str(tuning_sf),
-                    "--repeats", "3", "--mode", "salted",
-                    "--corpus-path", corpus,
-                ],
-                capture_output=True, text=True, check=True, cwd=REPO, env=env,
-            )
-            line = [ln for ln in out.stdout.strip().splitlines() if ln.startswith("{")][-1]
-            results[codec] = json.loads(line)
-        print(json.dumps({"salted_shuffle_codec": results}))
-        return
 
     if args.scaling:
         scaling_sf = float(os.environ.get("SPARK_GRAFT_SCALING_SF", "1.6"))
@@ -809,7 +633,6 @@ Reproduce: `python bench.py --scaling`
         mode=args.mode,
         shard=shard,
         corpus_path=args.corpus_path,
-        profile_stages=args.profile_stages,
         buckets=args.buckets,
         salt_partitions=args.salt_partitions,
     )

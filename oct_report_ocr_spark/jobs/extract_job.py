@@ -20,17 +20,29 @@ SURVEY.md §3.1), designed for 10¹²-row tables:
    (crawls store same-site pages adjacently; url-hash scatters them).
 4. **mapInArrow** extraction (jobs/extract_udf.py) — the only Python
    stage; everything around it is whole-stage-codegen JVM.
-5. **Idempotent partitioned write + manifest commit** (D10): output is
-   partitioned by bucket; a bucket is *completed* only when its row
-   appears in the manifest table, which is written strictly after the
-   data. Restart = anti-join pending buckets against the manifest and
+5. **Idempotent partitioned write** (D10): output is partitioned by
+   bucket; a bucket is *completed* only when its row appears in the
+   manifest table, which is written strictly after the data. Restart =
+   anti-join pending buckets against the manifest and
    dynamic-partition-overwrite them — duplicates impossible, gaps
    impossible (the reference's CSV file-exists resume,
-   extract_onh_rnfl_report_text_ou.py:64,308-310, made atomic).
-6. **Lineage/metrics** (D8/D11): the manifest row carries per-bucket
-   doc counts, ok/failed, byte totals and an order-insensitive content
-   checksum, computed by re-reading the *written* files (verifying
-   readability, not just write success).
+   extract_onh_rnfl_report_text_ou.py:64,308-310, made atomic). The
+   extracted rows are hashed by bucket into ``min(buckets,
+   defaultParallelism)`` tasks: each bucket still lands in exactly one
+   task, so each bucket still gets one file, but the write runs as one
+   wave. With fewer cores than buckets, one task per bucket would run
+   in several waves, each task paying Spark's fixed per-task cost
+   (scheduling, task deserialization, writer set-up) for a small file.
+6. **Lineage/metrics + manifest commit** (D8/D11): the manifest row
+   carries per-bucket doc counts, ok/failed, byte totals and an
+   order-insensitive content checksum, computed by re-reading the
+   *written* files (verifying readability, not just write success).
+   The re-read (:func:`read_sink`) lists the bucket directories on the
+   driver and passes the sink's known schema, so it launches no listing
+   or schema-inference job; its splits are sized by Spark's default
+   ``maxPartitionBytes`` against the session's parallelism, not by the
+   input scan's small splits, which would put every small bucket file
+   in a task of its own.
 """
 
 from __future__ import annotations
@@ -45,6 +57,12 @@ from oct_report_ocr_spark.session import conf_override, read_parquet_if_exists
 
 LARGE_HTML_BYTES = 256 * 1024
 INPUT_COLS = ("url", "warc_ts", "html")
+#: the sink under ``output``: bucket-partitioned rows, and the manifest
+#: table committed strictly after them
+DATA_DIR = "extracted"
+MANIFEST_DIR = "_manifests"
+#: the sink's rows: the kernel's output plus the partition column
+SINK_DDL = f"{OUTPUT_DDL}, bucket int"
 
 #: target bytes per salted reduce task (parquet's maxPartitionBytes twin):
 #: the exchange should never hand a Python worker more than one scan
@@ -118,7 +136,8 @@ def extract_df(
       key range for huge pages. Robust to ANY input layout — whole-site
       dump files, giant-page clustering, sources whose per-byte CPU
       cost is wildly uneven — at the price of shuffling the full
-      payload once (zstd-compressed; bench.py --salted-tuning).
+      payload once (zstd-compressed; BENCH/BASELINE.md, salted-mode
+      tuning).
       Output bytes are identical in both modes (the kernel is
       partitioning-invariant — tested).
     """
@@ -182,10 +201,49 @@ def _manifest_rows(extracted_files: DataFrame) -> DataFrame:
 def completed_buckets(spark: SparkSession, output: str) -> list[int]:
     # only a MISSING manifest means "first run"; a transient/corrupt
     # read propagates rather than silently re-extracting every bucket
-    m = read_parquet_if_exists(spark, os.path.join(output, "_manifests"))
+    m = read_parquet_if_exists(spark, os.path.join(output, MANIFEST_DIR))
     if m is None:
         return []
     return [r.bucket for r in m.select("bucket").distinct().collect()]
+
+
+def bucket_dirs(spark: SparkSession, output: str) -> dict[int, str]:
+    """The sink's ``bucket=<b>`` directories as bucket -> path, listed
+    on the driver through the Hadoop FileSystem of the path (empty when
+    the data directory does not exist)."""
+    hadoop = spark._jvm.org.apache.hadoop.fs
+    data_path = os.path.join(output, DATA_DIR)
+    pattern = hadoop.Path(data_path, "bucket=*")
+    fs = pattern.getFileSystem(spark._jsc.hadoopConfiguration())
+    dirs = {}
+    for p in hadoop.FileUtil.stat2Paths(fs.globStatus(pattern)) or []:
+        name = p.getName()
+        value = name.partition("=")[2]
+        if value.isdigit():
+            dirs[int(value)] = os.path.join(data_path, name)
+    return dirs
+
+
+def read_sink(spark: SparkSession, output: str, skip: list[int] | None = None) -> DataFrame:
+    """The rows written to the sink at ``output`` (``SINK_DDL``), leaving
+    out the buckets in ``skip``.
+
+    Spark hands a directory listing to a distributed job once the
+    directories outnumber ``parallelPartitionDiscovery.threshold`` (32),
+    and infers a parquet schema with another job; at 64 buckets that is
+    a 64-task job for a few ms of listing. Here the driver lists the
+    bucket directories, Spark lists the files in each on the driver too,
+    and the schema is the known one."""
+    dirs = [d for b, d in sorted(bucket_dirs(spark, output).items()) if b not in (skip or ())]
+    if not dirs:
+        return spark.createDataFrame([], SINK_DDL)
+    threshold = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    with conf_override(spark, threshold, str(len(dirs))):
+        return (
+            spark.read.schema(SINK_DDL)
+            .option("basePath", os.path.join(output, DATA_DIR))
+            .parquet(*dirs)
+        )
 
 
 def run(
@@ -203,8 +261,8 @@ def run(
     ``salt_partitions`` (salted mode) widens the Python-stage exchange
     without touching the sink bucket identity — resolve it with
     :func:`salt_width`; the CLI does so automatically."""
-    data_path = os.path.join(output, "extracted")
-    manifest_path = os.path.join(output, "_manifests")
+    data_path = os.path.join(output, DATA_DIR)
+    manifest_path = os.path.join(output, MANIFEST_DIR)
     if fresh and os.path.isdir(output):
         import shutil
 
@@ -226,22 +284,23 @@ def run(
         # bucket per task, so the partitioned write below emits one clean
         # file per bucket; the scan-aligned plan — or a salted plan whose
         # exchange was widened past the bucket count — would instead
-        # emit up to tasks x buckets tiny files. Repartition the
-        # EXTRACTED rows by bucket — this shuffle moves main-content
-        # text only, a fraction of the raw html payload the salted mode
-        # shuffles.
-        plan = plan.repartition(buckets, "bucket")
+        # emit up to tasks x buckets tiny files. Hash the EXTRACTED rows
+        # by bucket — this shuffle moves main-content text only, a
+        # fraction of the raw html payload the salted mode shuffles —
+        # into one wave of tasks: every bucket still lands in exactly one
+        # task, so it still gets exactly one file.
+        plan = plan.repartition(min(buckets, spark.sparkContext.defaultParallelism), "bucket")
 
     # dynamic overwrite: a retried pending bucket replaces its partial
     # files instead of appending duplicates (idempotent re-run)
     with conf_override(spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"):
         plan.write.partitionBy("bucket").mode("overwrite").parquet(data_path)
 
-    # manifest commit AFTER data: re-read what was actually written
-    written = spark.read.parquet(data_path)
-    pending = written if not done else written.filter(~F.col("bucket").isin(done))
-    manifest = _manifest_rows(pending)
-    manifest.write.mode("append").parquet(manifest_path)
+    # manifest commit AFTER data: re-read what was actually written, in
+    # splits sized by Spark's default maxPartitionBytes (see read_sink)
+    manifest = _manifest_rows(read_sink(spark, output, skip=done))
+    with conf_override(spark, "spark.sql.files.maxPartitionBytes", None):
+        manifest.write.mode("append").parquet(manifest_path)
 
     all_manifest = spark.read.parquet(manifest_path)
     totals = all_manifest.agg(
@@ -262,9 +321,7 @@ def run(
 
 def quarantine(spark: SparkSession, output: str) -> DataFrame:
     """The D9 quarantine view: rows that failed extraction."""
-    return spark.read.parquet(os.path.join(output, "extracted")).filter(
-        F.col("error").isNotNull()
-    )
+    return read_sink(spark, output).filter(F.col("error").isNotNull())
 
 
 def main() -> None:

@@ -37,7 +37,12 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from oct_report_ocr_spark.jobs.extract_job import _manifest_rows
+from oct_report_ocr_spark.jobs.extract_job import (
+    MANIFEST_DIR,
+    _manifest_rows,
+    bucket_dirs,
+    read_sink,
+)
 
 
 def audit_sink(spark: SparkSession, output: str) -> DataFrame:
@@ -48,17 +53,14 @@ def audit_sink(spark: SparkSession, output: str) -> DataFrame:
     match; ``checksum_mismatch`` — data present and manifested but
     drifted; ``orphan`` — data on disk without a manifest row;
     ``missing`` — manifest row without data on disk."""
-    data_path = os.path.join(output, "extracted")
-    manifest_path = os.path.join(output, "_manifests")
-    data = spark.read.parquet(data_path)
     recomputed = (
-        _manifest_rows(data)
+        _manifest_rows(read_sink(spark, output))
         .withColumnRenamed("n_rows", "data_rows")
         .withColumnRenamed("content_checksum", "data_checksum")
         .select("bucket", "data_rows", "data_checksum")
     )
     manifest = (
-        spark.read.parquet(manifest_path)
+        spark.read.parquet(os.path.join(output, MANIFEST_DIR))
         .select("bucket", "n_rows", "content_checksum")
         .withColumnRenamed("n_rows", "manifest_rows")
         .withColumnRenamed("content_checksum", "manifest_checksum")
@@ -103,9 +105,8 @@ def vacuum_orphans(
         r.bucket for r in report.filter(F.col("status") == "orphan").collect()
     ]
     if apply:
-        data_path = os.path.join(output, "extracted")
+        dirs = bucket_dirs(spark, output)
         for b in orphans:
-            d = os.path.join(data_path, f"bucket={b}")
-            if os.path.isdir(d):
-                shutil.rmtree(d)
+            if b in dirs:
+                shutil.rmtree(dirs[b])
     return sorted(orphans)

@@ -16,15 +16,19 @@ from pyspark.sql import DataFrame, SparkSession
 
 
 @contextlib.contextmanager
-def conf_override(spark: SparkSession, key: str, value: str):
+def conf_override(spark: SparkSession, key: str, value: str | None):
     """Set a session conf for the duration of a block, restoring the
     prior value (or unsetting) on exit — sink writes that need
     ``partitionOverwriteMode=dynamic`` must not leak it into a shared
     session, where it would silently switch a later partitioned
     ``mode("overwrite")`` write from truncate-all to dynamic semantics
-    (ADVICE r04)."""
+    (ADVICE r04). ``value=None`` unsets the key for the block, so
+    Spark's own default applies there."""
     prior = spark.conf.get(key, None)
-    spark.conf.set(key, value)
+    if value is None:
+        spark.conf.unset(key)
+    else:
+        spark.conf.set(key, value)
     try:
         yield
     finally:
@@ -89,10 +93,10 @@ def get_spark(
         # shuffle-block codec (VERDICT r01 item 6): zstd level 1 beat
         # the lz4 default on the salted full-payload exchange in 2 of 3
         # A/B windows, median +11% (31.3k vs 28.1k docs/sec at sf0.4 —
-        # bench.py --salted-tuning): HTML payloads compress ~2x better
-        # under zstd, and the saved shuffle bytes outweigh the codec
-        # CPU even on tmpfs; on a cluster the byte saving also halves
-        # NVMe/NIC shuffle traffic. Override with SPARK_GRAFT_IO_CODEC.
+        # BENCH/BASELINE.md, salted-mode tuning): HTML payloads compress
+        # ~2x better under zstd, and the saved shuffle bytes outweigh the
+        # codec CPU even on tmpfs; on a cluster the byte saving also
+        # halves NVMe/NIC shuffle traffic. Override with SPARK_GRAFT_IO_CODEC.
         .config(
             "spark.io.compression.codec",
             os.environ.get("SPARK_GRAFT_IO_CODEC", "zstd"),

@@ -156,6 +156,10 @@ def _lzw_encode(indices, min_code_size: int) -> bytes:
         run = bytes([px])
     if run:
         emit(table[run], width)
+        # the decoder adds one more entry on reading that code, and widens
+        # before the END code when the add lands on 1 << width
+        if next_code == (1 << width) and width < 12:
+            width += 1
     emit(end, width)
     if nbits:
         out.append(acc & 0xFF)

@@ -141,6 +141,64 @@ def test_scan_aligned_run_matches_salted_and_file_layout(spark, corpus, tmp_path
         assert n_files == 1, bdir
 
 
+def test_sink_commit_runs_in_one_wave(spark, corpus, tmp_path):
+    """With more buckets than cores, no stage of the job runs more than
+    defaultParallelism tasks: the write hashes the buckets into one wave
+    of tasks, and the verification read neither lists the bucket
+    directories in a job of their own nor gives each small file its own
+    task. Each bucket still gets exactly one file, and the committed
+    manifest equals one computed independently over the written files."""
+    sc = spark.sparkContext
+    parallelism = sc.defaultParallelism
+    buckets = 64
+    assert buckets > parallelism
+    # the kernel stage's width is the input's scan splits; this corpus
+    # fits in one wave, so every stage of the job is under the bound
+    assert spark.read.parquet(corpus).rdd.getNumPartitions() <= parallelism
+    out = str(tmp_path / "out")
+    sc.setJobGroup("one-wave-sink", "extract_job.run, buckets > parallelism")
+    try:
+        stats = extract_job.run(spark, corpus, out, buckets=buckets, fresh=True)
+    finally:
+        sc._jsc.clearJobGroup()
+    tracker = sc.statusTracker()
+    widths = {
+        sid: tracker.getStageInfo(sid).numTasks
+        for jid in tracker.getJobIdsForGroup("one-wave-sink")
+        for sid in tracker.getJobInfo(jid).stageIds
+    }
+    assert widths and max(widths.values()) <= parallelism, widths
+
+    bucket_dirs = glob.glob(os.path.join(out, "extracted", "bucket=*"))
+    assert len(bucket_dirs) == stats["buckets_done"]
+    for bdir in bucket_dirs:
+        assert len(glob.glob(os.path.join(bdir, "*.parquet"))) == 1, bdir
+
+    def by_bucket(df):
+        return {r.bucket: r.asDict() for r in df.collect()}
+
+    committed = by_bucket(spark.read.parquet(os.path.join(out, "_manifests")))
+    recomputed = by_bucket(
+        extract_job._manifest_rows(spark.read.parquet(os.path.join(out, "extracted")))
+    )
+    assert len(committed) == stats["buckets_done"]
+    assert committed == recomputed
+
+
+def test_rerun_of_a_committed_sink_commits_nothing(spark, corpus, tmp_path):
+    """A rerun after every bucket committed extracts nothing, re-reads
+    no bucket and appends no manifest row."""
+    out = str(tmp_path / "out")
+    first = extract_job.run(spark, corpus, out, buckets=4, fresh=True)
+    again = extract_job.run(spark, corpus, out, buckets=4)
+    assert again["resumed_buckets_skipped"] == 4
+    assert {k: again[k] for k in ("rows", "ok", "failed", "buckets_done")} == {
+        k: first[k] for k in ("rows", "ok", "failed", "buckets_done")
+    }
+    assert spark.read.parquet(os.path.join(out, "_manifests")).count() == 4
+    assert extract_job.read_sink(spark, out, skip=[0, 1, 2, 3]).count() == 0
+
+
 def test_lang_filter_pushed_to_scan(spark, corpus):
     """The routing predicate must reach the parquet reader (S2 analog:
     BigQuery executed the LIKE server-side; Catalyst must push ours)."""

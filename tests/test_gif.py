@@ -57,6 +57,26 @@ def test_gif_lzw_dictionary_reset():
     assert np.array_equal(decode_gif(encode_gif(img)), img)
 
 
+# The decoder widens its code size when an add lands on 1 << width, also
+# on reading the final data code, so the END code that follows must be
+# written one bit wider. Both cases end the stream on a byte boundary,
+# where zero padding bits cannot rescue a too-narrow END code.
+
+
+def test_gif_end_code_width_regression():
+    img = _img(1, 22, 2, 0)
+    assert np.array_equal(decode_gif(encode_gif(img)), img)
+
+
+def test_lzw_end_code_width_after_last_add_regression():
+    from oct_report_ocr_spark.sources.gif import _lzw_decode, _lzw_encode
+
+    # eleven single-symbol codes (no digram repeats): the tenth add lands
+    # on 16 == 1 << 4, and clear + 3x3 + 8x4 + END bits end on byte 6
+    indices = [0, 0, 1, 0, 2, 0, 3, 1, 1, 2, 1]
+    assert list(_lzw_decode(_lzw_encode(indices, 2), 2, len(indices))) == indices
+
+
 def test_gif_transparency_composites_background():
     """Transparent pixels show the logical-screen background (palette
     entry 0 — the encoder's background index)."""
