@@ -17,17 +17,20 @@ Stages (all lazy until the sinks; nothing collects corpus-sized data):
    mixing reads) and the dataloader shard layout
    (pmod(xxhash64(doc_id), n) dirs, rows sorted within shard).
 
-**Resumability (D10, VERDICT r03 item 3)** — the same contract
-``jobs/extract_job.py`` gives extraction, applied to both curation
-sinks. The resume unit is the sink partition: a (tier, lang) cell for
-the tiered corpus, a shard id for the shard layout. A unit is
-*completed* only when its row appears in the append-only manifest
+**Resumability (D10, VERDICT r03 item 3)** — both sinks commit
+through ``jobs/sink.py``, the protocol the extraction sink uses. The
+resume unit is the sink partition: a (tier, lang) cell for the tiered
+corpus, a shard id for the shard layout. A unit is *completed* only
+when its row appears in the append-only manifest
 (``<out>/_manifests/cells`` / ``<out>/_manifests/shards``), which is
 written strictly AFTER its data, from a re-read of the written files.
-Restart = filter completed units out of the labeled stream (map-only
-codegen — tier/shard membership is a pure per-row function) and
+Restart = filter completed units out of the rows (map-only codegen —
+tier/shard membership is a pure per-row function) and
 dynamic-partition-overwrite the rest, so a unit left partial by a
-crash is rewritten whole: duplicates impossible, gaps impossible.
+crash is rewritten whole: duplicates impossible, gaps impossible. The
+shard sink is built from the committed tiered sink, so the dedup and
+labeling chain runs once per call; the tiered sink is complete once
+its commit returns, so this holds on resume too.
 Every upstream stage is a deterministic function of the immutable
 input (dedup survivor = min doc_id per fingerprint; mix thresholds =
 integer functions of full-corpus source counts), so the resumed rows
@@ -38,8 +41,8 @@ Scale posture: stage 2 is the only corpus shuffle before the sinks'
 own layout shuffles; the survivor join runs on the same key as the
 groupBy so the exchange is reused. The completed-unit filters run
 before the sink shuffles, so on resume the payload of completed cells
-is never shuffled again. Metrics are one small JSON line (driver-side
-aggregates only; manifests are O(cells + shards) rows).
+is never shuffled again. Metrics are one small JSON line, totalled from
+the committed manifest rows (O(cells + shards) rows).
 
 Reference anchor: generalizes the reference's per-batch fetch→clean→
 assemble loop (extract_onh_rnfl_report_text_ou.py:60-170) into a
@@ -51,111 +54,44 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from oct_report_ocr_spark.session import conf_override, read_parquet_if_exists
+from oct_report_ocr_spark.jobs.sink import Sink, commit, committed, read
 
-_CELL_SEP = "/"
+#: the hive (tier, lang) corpus: tier_label's columns, and one manifest
+#: row per cell
+TIERED = Sink(
+    "tiered",
+    os.path.join("_manifests", "cells"),
+    ("tier", "lang"),
+    "doc_id bigint, n_words bigint, sum_len bigint, has_stop boolean, tier string, lang string",
+    lambda: [F.count(F.lit(1)).alias("n_docs"), F.sum("n_words").alias("total_words")],
+)
+#: the dataloader layout: shard = pmod(xxhash64(doc_id), n) dirs, rows
+#: sorted by doc_id within a shard, and one manifest row per shard
+SHARDS = Sink(
+    "shards",
+    os.path.join("_manifests", "shards"),
+    ("shard",),
+    "doc_id bigint, lang string, tier string, n_words bigint, shard int",
+    lambda: [F.count(F.lit(1)).alias("n_rows")],
+)
 
 
-def _cell_key() -> F.Column:
-    return F.concat_ws(_CELL_SEP, F.col("tier"), F.col("lang"))
+def _cell(key: tuple[str, str]) -> str:
+    tier, lang = key
+    return f"{tier}/{lang}"
 
 
 def completed_cells(spark: SparkSession, output: str) -> list[str]:
-    """(tier, lang) cells already committed to the cell manifest —
-    'tier/lang' keys, [] on a fresh sink. Only a MISSING manifest means
-    "first run"; a transient/corrupt read propagates (a damaged
-    manifest misread as empty would re-append every committed cell and
-    double-count the stats)."""
-    m = read_parquet_if_exists(spark, os.path.join(output, "_manifests", "cells"))
-    if m is None:
-        return []
-    return [
-        f"{r.tier}{_CELL_SEP}{r.lang}"
-        for r in m.select("tier", "lang").distinct().collect()
-    ]
+    """(tier, lang) cells already committed to the cell manifest, as
+    'tier/lang' keys; [] on a fresh sink."""
+    return [_cell(k) for k in committed(spark, TIERED, output)]
 
 
 def completed_shards(spark: SparkSession, output: str) -> list[int]:
-    m = read_parquet_if_exists(spark, os.path.join(output, "_manifests", "shards"))
-    if m is None:
-        return []
-    return [r.shard for r in m.select("shard").distinct().collect()]
-
-
-def _write_tiered_resumable(
-    spark: SparkSession, labeled: DataFrame, output: str, done: list[str]
-) -> None:
-    """Tier-partitioned corpus sink with per-cell resume. Layout is
-    identical to ``sources.io.write_tiered_corpus`` (hive (tier, lang)
-    dirs, one writer task per cell); the manifest differs: append-only
-    under ``_manifests/cells``, one row per cell, committed after a
-    re-read of the written files (readability verified, not just write
-    success)."""
-    data_path = os.path.join(output, "tiered")
-    manifest_path = os.path.join(output, "_manifests", "cells")
-    pending = labeled
-    if done:
-        pending = pending.filter(~_cell_key().isin(done))
-    with conf_override(spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"):
-        (
-            pending.repartition("tier", "lang")
-            .write.mode("overwrite")
-            .partitionBy("tier", "lang")
-            .parquet(data_path)
-        )
-    written = spark.read.parquet(data_path)
-    if done:
-        written = written.filter(~_cell_key().isin(done))
-    (
-        written.groupBy("tier", "lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_words").alias("total_words"),
-        )
-        .write.mode("append")
-        .parquet(manifest_path)
-    )
-
-
-def _write_shards_resumable(
-    spark: SparkSession,
-    slim: DataFrame,
-    output: str,
-    done: list[int],
-    n_shards: int,
-) -> None:
-    """Shard-partitioned dataloader sink with per-shard resume. Same
-    layout and retry-stability contract as
-    ``sources.io.write_training_shards`` (shard = pmod(xxhash64(doc_id),
-    n), rows sorted by (shard, doc_id) within a shard); manifest is
-    append-only under ``_manifests/shards``."""
-    data_path = os.path.join(output, "shards")
-    manifest_path = os.path.join(output, "_manifests", "shards")
-    sharded = slim.withColumn(
-        "shard", F.pmod(F.xxhash64(F.col("doc_id")), F.lit(n_shards)).cast("int")
-    )
-    if done:
-        sharded = sharded.filter(~F.col("shard").isin(done))
-    with conf_override(spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"):
-        (
-            sharded.repartition(n_shards, "shard")
-            .sortWithinPartitions("shard", "doc_id")
-            .write.mode("overwrite")
-            .partitionBy("shard")
-            .parquet(data_path)
-        )
-    written = spark.read.parquet(data_path)
-    if done:
-        written = written.filter(~F.col("shard").isin(done))
-    (
-        written.groupBy("shard")
-        .agg(F.count(F.lit(1)).alias("n_rows"))
-        .write.mode("append")
-        .parquet(manifest_path)
-    )
+    return sorted(committed(spark, SHARDS, output))
 
 
 def run(
@@ -179,8 +115,8 @@ def run(
 
         shutil.rmtree(output_path)
 
-    done_cells = [] if fresh else completed_cells(spark, output_path)
-    done_shards = [] if fresh else completed_shards(spark, output_path)
+    done_cells = {} if fresh else committed(spark, TIERED, output_path)
+    done_shards = {} if fresh else committed(spark, SHARDS, output_path)
 
     if input_format == "wet":
         wet = read_wet(spark, input_path)
@@ -221,37 +157,34 @@ def run(
         deduped = mix_sample_df(deduped, mix_target)
 
     labeled = tier_label(deduped)
-    _write_tiered_resumable(spark, labeled, output_path, done_cells)
-    _write_shards_resumable(
+    if done_cells:
+        cell = F.concat_ws("/", "tier", "lang")
+        labeled = labeled.filter(~cell.isin([_cell(k) for k in done_cells]))
+    # one writer task per cell, so a small cell gets one file
+    cells = commit(spark, TIERED, output_path, labeled.repartition("tier", "lang"), done_cells)
+
+    sharded = (
+        read(spark, TIERED, output_path)
+        .select("doc_id", "lang", "tier", "n_words")
+        .withColumn("shard", F.pmod(F.xxhash64(F.col("doc_id")), F.lit(n_shards)).cast("int"))
+    )
+    if done_shards:
+        sharded = sharded.filter(~F.col("shard").isin(sorted(done_shards)))
+    shards = commit(
         spark,
-        labeled.select("doc_id", "lang", "tier", "n_words"),
+        SHARDS,
         output_path,
+        sharded.repartition(n_shards, "shard").sortWithinPartitions("shard", "doc_id"),
         done_shards,
-        n_shards,
     )
 
-    # last-writer-wins per unit: the append-only manifests normally hold
-    # one row per cell/shard, but if a unit was ever re-committed the
-    # stats must count it once, not per append
-    cells = (
-        spark.read.parquet(os.path.join(output_path, "_manifests", "cells"))
-        .groupBy("tier", "lang")
-        .agg(F.max("n_docs").alias("n_docs"), F.max("total_words").alias("total_words"))
-        .collect()
-    )
-    shards = (
-        spark.read.parquet(os.path.join(output_path, "_manifests", "shards"))
-        .groupBy("shard")
-        .agg(F.max("n_rows").alias("n_rows"))
-        .collect()
-    )
-    n_out = sum(r.n_docs for r in cells)
+    n_out = sum(r.n_docs for r in cells.values())
     return {
         "rows_in": int(n_in),
         "rows_out": int(n_out),
         "removed": int(n_in) - int(n_out),
-        "tiers": {f"{r.tier}/{r.lang}": int(r.n_docs) for r in cells},
-        "shards": {int(r.shard): int(r.n_rows) for r in shards},
+        "tiers": {_cell(k): int(r.n_docs) for k, r in cells.items()},
+        "shards": {int(k): int(r.n_rows) for k, r in shards.items()},
         "resumed_cells_skipped": len(done_cells),
         "resumed_shards_skipped": len(done_shards),
         "output": output_path,

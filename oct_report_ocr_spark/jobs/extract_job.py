@@ -21,13 +21,12 @@ SURVEY.md §3.1), designed for 10¹²-row tables:
 4. **mapInArrow** extraction (jobs/extract_udf.py) — the only Python
    stage; everything around it is whole-stage-codegen JVM.
 5. **Idempotent partitioned write** (D10): output is partitioned by
-   bucket; a bucket is *completed* only when its row appears in the
-   manifest table, which is written strictly after the data. Restart =
-   anti-join pending buckets against the manifest and
-   dynamic-partition-overwrite them — duplicates impossible, gaps
-   impossible (the reference's CSV file-exists resume,
-   extract_onh_rnfl_report_text_ou.py:64,308-310, made atomic). The
-   extracted rows are hashed by bucket into ``min(buckets,
+   bucket and committed through ``jobs/sink.py``, the commit protocol
+   shared with the curation sinks: a bucket is *completed* only when
+   its row appears in the manifest table, which is written strictly
+   after the data; restart = drop the committed buckets on the scan
+   side (step 1, before the UDF) and dynamic-partition-overwrite the
+   rest. The extracted rows are hashed by bucket into ``min(buckets,
    defaultParallelism)`` tasks: each bucket still lands in exactly one
    task, so each bucket still gets one file, but the write runs as one
    wave. With fewer cores than buckets, one task per bucket would run
@@ -37,12 +36,8 @@ SURVEY.md §3.1), designed for 10¹²-row tables:
    carries per-bucket doc counts, ok/failed, byte totals and an
    order-insensitive content checksum, computed by re-reading the
    *written* files (verifying readability, not just write success).
-   The re-read (:func:`read_sink`) lists the bucket directories on the
-   driver and passes the sink's known schema, so it launches no listing
-   or schema-inference job; its splits are sized by Spark's default
-   ``maxPartitionBytes`` against the session's parallelism, not by the
-   input scan's small splits, which would put every small bucket file
-   in a task of its own.
+   The run's stats are totals of the committed manifest rows, one row
+   per bucket.
 """
 
 from __future__ import annotations
@@ -53,7 +48,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from oct_report_ocr_spark.jobs.extract_udf import OUTPUT_DDL, extract_batches
-from oct_report_ocr_spark.session import conf_override, read_parquet_if_exists
+from oct_report_ocr_spark.jobs.sink import Sink, commit, committed, read
 
 LARGE_HTML_BYTES = 256 * 1024
 INPUT_COLS = ("url", "warc_ts", "html")
@@ -182,9 +177,10 @@ def extract_df(
     return out.withColumn("bucket", F.pmod(F.xxhash64(F.col("url")), F.lit(buckets)).cast("int"))
 
 
-def _manifest_rows(extracted_files: DataFrame) -> DataFrame:
-    """Per-bucket lineage/metrics aggregate over (re-read) output rows."""
-    return extracted_files.groupBy("bucket").agg(
+def _bucket_aggregates() -> list[F.Column]:
+    """Per-bucket lineage/metrics: counts, bytes and an
+    order-insensitive content checksum."""
+    return [
         F.count(F.lit(1)).alias("n_rows"),
         F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0)).alias("n_failed"),
         F.sum(F.when(F.col("error").isNull(), 1).otherwise(0)).alias("n_ok"),
@@ -195,55 +191,27 @@ def _manifest_rows(extracted_files: DataFrame) -> DataFrame:
             "content_checksum"
         ),
         F.sum("n_spans").alias("n_spans"),
-    )
+    ]
+
+
+#: the extraction sink: bucket-partitioned rows under ``extracted``, and
+#: one manifest row per bucket under ``_manifests``
+EXTRACTED = Sink(DATA_DIR, MANIFEST_DIR, ("bucket",), SINK_DDL, _bucket_aggregates)
+
+
+def _manifest_rows(extracted_files: DataFrame) -> DataFrame:
+    """Per-bucket lineage/metrics aggregate over (re-read) output rows."""
+    return EXTRACTED.manifest_rows(extracted_files)
 
 
 def completed_buckets(spark: SparkSession, output: str) -> list[int]:
-    # only a MISSING manifest means "first run"; a transient/corrupt
-    # read propagates rather than silently re-extracting every bucket
-    m = read_parquet_if_exists(spark, os.path.join(output, MANIFEST_DIR))
-    if m is None:
-        return []
-    return [r.bucket for r in m.select("bucket").distinct().collect()]
-
-
-def bucket_dirs(spark: SparkSession, output: str) -> dict[int, str]:
-    """The sink's ``bucket=<b>`` directories as bucket -> path, listed
-    on the driver through the Hadoop FileSystem of the path (empty when
-    the data directory does not exist)."""
-    hadoop = spark._jvm.org.apache.hadoop.fs
-    data_path = os.path.join(output, DATA_DIR)
-    pattern = hadoop.Path(data_path, "bucket=*")
-    fs = pattern.getFileSystem(spark._jsc.hadoopConfiguration())
-    dirs = {}
-    for p in hadoop.FileUtil.stat2Paths(fs.globStatus(pattern)) or []:
-        name = p.getName()
-        value = name.partition("=")[2]
-        if value.isdigit():
-            dirs[int(value)] = os.path.join(data_path, name)
-    return dirs
+    return sorted(committed(spark, EXTRACTED, output))
 
 
 def read_sink(spark: SparkSession, output: str, skip: list[int] | None = None) -> DataFrame:
     """The rows written to the sink at ``output`` (``SINK_DDL``), leaving
-    out the buckets in ``skip``.
-
-    Spark hands a directory listing to a distributed job once the
-    directories outnumber ``parallelPartitionDiscovery.threshold`` (32),
-    and infers a parquet schema with another job; at 64 buckets that is
-    a 64-task job for a few ms of listing. Here the driver lists the
-    bucket directories, Spark lists the files in each on the driver too,
-    and the schema is the known one."""
-    dirs = [d for b, d in sorted(bucket_dirs(spark, output).items()) if b not in (skip or ())]
-    if not dirs:
-        return spark.createDataFrame([], SINK_DDL)
-    threshold = "spark.sql.sources.parallelPartitionDiscovery.threshold"
-    with conf_override(spark, threshold, str(len(dirs))):
-        return (
-            spark.read.schema(SINK_DDL)
-            .option("basePath", os.path.join(output, DATA_DIR))
-            .parquet(*dirs)
-        )
+    out the buckets in ``skip`` (see :func:`jobs.sink.read`)."""
+    return read(spark, EXTRACTED, output, skip=skip or ())
 
 
 def run(
@@ -261,28 +229,26 @@ def run(
     ``salt_partitions`` (salted mode) widens the Python-stage exchange
     without touching the sink bucket identity — resolve it with
     :func:`salt_width`; the CLI does so automatically."""
-    data_path = os.path.join(output, DATA_DIR)
-    manifest_path = os.path.join(output, MANIFEST_DIR)
     if fresh and os.path.isdir(output):
         import shutil
 
         shutil.rmtree(output)
 
-    done = [] if fresh else completed_buckets(spark, output)
+    done = {} if fresh else committed(spark, EXTRACTED, output)
 
     docs = spark.read.parquet(input_path)
     plan = extract_df(
         docs,
         buckets=buckets,
         lang=lang,
-        exclude_buckets=done,
+        exclude_buckets=sorted(done),
         mode=mode,
         salt_partitions=salt_partitions,
     )
     if mode == "scan-aligned" or (salt_partitions is not None and salt_partitions != buckets):
         # a bucket-aligned salted run (salt == buckets) arrives with one
-        # bucket per task, so the partitioned write below emits one clean
-        # file per bucket; the scan-aligned plan — or a salted plan whose
+        # bucket per task, so the partitioned write emits one clean file
+        # per bucket; the scan-aligned plan — or a salted plan whose
         # exchange was widened past the bucket count — would instead
         # emit up to tasks x buckets tiny files. Hash the EXTRACTED rows
         # by bucket — this shuffle moves main-content text only, a
@@ -291,31 +257,14 @@ def run(
         # task, so it still gets exactly one file.
         plan = plan.repartition(min(buckets, spark.sparkContext.defaultParallelism), "bucket")
 
-    # dynamic overwrite: a retried pending bucket replaces its partial
-    # files instead of appending duplicates (idempotent re-run)
-    with conf_override(spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"):
-        plan.write.partitionBy("bucket").mode("overwrite").parquet(data_path)
-
-    # manifest commit AFTER data: re-read what was actually written, in
-    # splits sized by Spark's default maxPartitionBytes (see read_sink)
-    manifest = _manifest_rows(read_sink(spark, output, skip=done))
-    with conf_override(spark, "spark.sql.files.maxPartitionBytes", None):
-        manifest.write.mode("append").parquet(manifest_path)
-
-    all_manifest = spark.read.parquet(manifest_path)
-    totals = all_manifest.agg(
-        F.sum("n_rows").alias("rows"),
-        F.sum("n_ok").alias("ok"),
-        F.sum("n_failed").alias("failed"),
-        F.countDistinct("bucket").alias("buckets_done"),
-    ).collect()[0]
+    manifest = commit(spark, EXTRACTED, output, plan, done).values()
     return {
-        "rows": totals.rows,
-        "ok": totals.ok,
-        "failed": totals.failed,
-        "buckets_done": totals.buckets_done,
+        "rows": sum(r.n_rows for r in manifest),
+        "ok": sum(r.n_ok for r in manifest),
+        "failed": sum(r.n_failed for r in manifest),
+        "buckets_done": len(manifest),
         "resumed_buckets_skipped": len(done),
-        "output": data_path,
+        "output": os.path.join(output, DATA_DIR),
     }
 
 

@@ -1,7 +1,8 @@
 """Sink maintenance: fsck-style audit + orphan vacuum for the
 parquet + `_manifests` snapshot sink (jobs/extract_job.py).
 
-The sink's commit protocol is data-first, manifest-second (per bucket).
+The sink's commit protocol (``jobs/sink.py``) is data-first,
+manifest-second (per bucket).
 Without a table format (Iceberg unavailable in this environment —
 README probe), the failure windows are:
 
@@ -38,11 +39,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from oct_report_ocr_spark.jobs.extract_job import (
-    MANIFEST_DIR,
+    DATA_DIR,
+    EXTRACTED,
     _manifest_rows,
-    bucket_dirs,
     read_sink,
 )
+from oct_report_ocr_spark.jobs.sink import committed
 
 
 def audit_sink(spark: SparkSession, output: str) -> DataFrame:
@@ -59,11 +61,9 @@ def audit_sink(spark: SparkSession, output: str) -> DataFrame:
         .withColumnRenamed("content_checksum", "data_checksum")
         .select("bucket", "data_rows", "data_checksum")
     )
-    manifest = (
-        spark.read.parquet(os.path.join(output, MANIFEST_DIR))
-        .select("bucket", "n_rows", "content_checksum")
-        .withColumnRenamed("n_rows", "manifest_rows")
-        .withColumnRenamed("content_checksum", "manifest_checksum")
+    manifest = spark.createDataFrame(
+        [(b, r.n_rows, r.content_checksum) for b, r in committed(spark, EXTRACTED, output).items()],
+        "bucket int, manifest_rows bigint, manifest_checksum decimal(38,0)",
     )
     j = recomputed.join(F.broadcast(manifest), "bucket", "full_outer")
     status = (
@@ -105,8 +105,6 @@ def vacuum_orphans(
         r.bucket for r in report.filter(F.col("status") == "orphan").collect()
     ]
     if apply:
-        dirs = bucket_dirs(spark, output)
         for b in orphans:
-            if b in dirs:
-                shutil.rmtree(dirs[b])
+            shutil.rmtree(os.path.join(output, DATA_DIR, f"bucket={b}"))
     return sorted(orphans)

@@ -877,10 +877,11 @@ N_SHARDS = 8
 
 def q_shard_plan(spark: SparkSession, sf: str) -> DataFrame:
     """Shard-layout plan for the training-data sink: the oracle-paired
-    twin of ``sources.io.write_training_shards``. The sink uses
-    ``pmod(xxhash64(key), n)`` (JVM-only); this query proves the SAME
-    layout contract — hash-uniform, input-partitioning-independent
-    shard membership — with an engine-portable hash: the first 8 hex
+    twin of the curation job's shard sink (``jobs/curate_job.SHARDS``).
+    The sink uses ``pmod(xxhash64(key), n)`` (JVM-only); this query
+    proves the SAME layout contract — hash-uniform,
+    input-partitioning-independent shard membership — with an
+    engine-portable hash: the first 8 hex
     digits of md5(doc_id) as an integer, mod N_SHARDS. Emits the
     dataloader's planning table (per-shard row count, byte mass, and
     the id range a range-scan reader would seek).

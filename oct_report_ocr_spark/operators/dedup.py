@@ -678,9 +678,9 @@ def q_dedup_components(spark: SparkSession, sf: str) -> DataFrame:
 
 def dup_pairs(spark: SparkSession, sf: str) -> DataFrame:
     """The recall-complete verified duplicate-pair graph (capped-LSH ∪
-    heavy-bucket pairs) q_dedup_components closes over — exposed so the
-    scale harness (scripts/scale_components.py) can time pair
-    construction and the BSP loop separately."""
+    heavy-bucket pairs) q_dedup_components closes over — exposed so pair
+    construction and the BSP loop (``components_from_pairs``) can be
+    timed separately."""
     capped = _verify_pairs(spark, sf, q_minhash_lsh_pairs_capped(spark, sf))
     heavy = q_dedup_heavy_pass(spark, sf)
     return (

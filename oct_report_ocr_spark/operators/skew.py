@@ -6,9 +6,10 @@
   key inside one partition still serializes). The fact side gets a
   deterministic content-derived salt; the dim side is replicated
   ``n_salts`` ways; the join key becomes (key, salt).
-- ``write_bucketed`` / co-located joins: pre-bucketing both sides of a
-  recurring join key eliminates the per-query shuffle entirely — the
-  plan shows zero Exchange (asserted in tests/test_scale_mechanics.py).
+- co-located joins (``sources.io.write_bucketed_table``): pre-bucketing
+  both sides of a recurring join key eliminates the per-query shuffle
+  entirely — the plan shows zero Exchange (asserted in
+  tests/test_scale_mechanics.py).
   At 100 TB this converts the biggest repeated cost of the cohort DAG's
   user-key joins into a one-time layout decision.
 """
@@ -35,20 +36,3 @@ def salted_join(
     dim_s = dim.withColumn("_salt", F.explode(F.array(*[F.lit(i) for i in range(n_salts)])))
     out = fact_s.join(dim_s, [key, "_salt"], how)
     return out.drop("_salt")
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    key: str,
-    n_buckets: int = 8,
-) -> None:
-    """Persist as a bucketed (+ sorted) table so future equi-joins on
-    ``key`` between co-bucketed tables need no shuffle."""
-    (
-        df.write.bucketBy(n_buckets, key)
-        .sortBy(key)
-        .mode("overwrite")
-        .format("parquet")
-        .saveAsTable(table)
-    )

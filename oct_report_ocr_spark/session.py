@@ -1,10 +1,8 @@
 """SparkSession factory — one tuned config profile for the whole engine.
 
 Local-mode testing stands in for the multi-executor cluster: the same
-partitioning/shuffle discipline applies, only ``master`` changes (the
-north-rule scaling evidence runs the identical job at local[8] vs
-local[32]). On a real cluster, pass ``master=None`` and let
-spark-submit supply it.
+partitioning/shuffle discipline applies, only ``master`` changes. On a
+real cluster, pass ``master=None`` and let spark-submit supply it.
 """
 
 from __future__ import annotations
@@ -13,14 +11,15 @@ import contextlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 @contextlib.contextmanager
 def conf_override(spark: SparkSession, key: str, value: str | None):
     """Set a session conf for the duration of a block, restoring the
-    prior value (or unsetting) on exit — sink writes that need
-    ``partitionOverwriteMode=dynamic`` must not leak it into a shared
-    session, where it would silently switch a later partitioned
+    prior value (or unsetting) on exit — the sink commit's dynamic
+    partition-overwrite mode (``jobs/sink.py``) must not leak into a
+    shared session, where it would silently switch a later partitioned
     ``mode("overwrite")`` write from truncate-all to dynamic semantics
     (ADVICE r04). ``value=None`` unsets the key for the block, so
     Spark's own default applies there."""
@@ -38,8 +37,11 @@ def conf_override(spark: SparkSession, key: str, value: str | None):
             spark.conf.set(key, prior)
 
 
-def read_parquet_if_exists(spark: SparkSession, path: str) -> DataFrame | None:
-    """``spark.read.parquet`` that returns None ONLY when the path does
+def read_parquet_if_exists(
+    spark: SparkSession, path: str, schema: StructType | None = None
+) -> DataFrame | None:
+    """``spark.read.parquet`` (with ``schema`` when given, so no
+    schema-inference job runs) that returns None ONLY when the path does
     not exist (first run: no manifest yet). Any other failure —
     transient FS error, corrupt footer, permission — propagates: a
     resume job must fail loudly rather than treat a damaged manifest as
@@ -47,8 +49,9 @@ def read_parquet_if_exists(spark: SparkSession, path: str) -> DataFrame | None:
     r04)."""
     from pyspark.errors import AnalysisException
 
+    reader = spark.read if schema is None else spark.read.schema(schema)
     try:
-        return spark.read.parquet(path)
+        return reader.parquet(path)
     except AnalysisException as e:
         klass = ""
         for attr in ("getCondition", "getErrorClass"):  # 4.x name, then legacy
@@ -114,21 +117,6 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "4194304"),
         )
     )
-    # Shuffle/spill dirs on tmpfs are OPT-IN (SPARK_GRAFT_TMPFS=1, set by
-    # bench.py): this host's /tmp disk is slow AND bursty (measured 2x
-    # slower with 2.5x run-to-run variance on the shuffle-heavy extraction
-    # job), but tmpfs spill is RAM — fine for bounded benchmark runs,
-    # wrong as a default because a job that would degrade by spilling to
-    # disk instead hits no-space/memory pressure. Cluster nodes use local
-    # NVMe via SPARK_LOCAL_DIRS.
-    if (
-        os.environ.get("SPARK_GRAFT_TMPFS") == "1"
-        and "SPARK_LOCAL_DIRS" not in os.environ
-        and os.path.isdir("/dev/shm")
-    ):
-        shm = "/dev/shm/spark-local"
-        os.makedirs(shm, exist_ok=True)
-        b = b.config("spark.local.dir", shm)
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     spark = b.getOrCreate()

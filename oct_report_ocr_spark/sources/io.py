@@ -134,75 +134,6 @@ def lowercase_columns(df: DataFrame) -> DataFrame:
     return df.toDF(*[c.lower() for c in df.columns])
 
 
-def write_training_shards(
-    df: DataFrame, out_path: str, n_shards: int = 8, key_col: str = "doc_id"
-) -> DataFrame:
-    """Deterministic sharded training-data layout — the step after
-    curation/packing that a dataloader consumes: shard =
-    pmod(xxhash64(key), n_shards), each shard written as its own
-    partition directory with rows internally sorted by (shard, key),
-    so re-runs produce identical shard membership and row order
-    regardless of input partitioning or cluster size (the same
-    retry-stability contract as the extraction job's salted buckets).
-
-    One shuffle (the repartition on shard), then a partitioned parquet
-    write; xxhash64 spreads hot keys uniformly so shards stay balanced
-    without sampling. Returns the per-shard manifest (shard, n_rows) —
-    the dataloader's planning table — computed from the same shuffled
-    frame, so manifest and data cannot drift."""
-    shard = F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_shards)).cast("int")
-    sharded = (
-        df.withColumn("shard", shard)
-        .repartition(n_shards, "shard")
-        .sortWithinPartitions("shard", key_col)
-        .persist()
-    )
-    sharded.write.mode("overwrite").partitionBy("shard").parquet(out_path)
-    manifest = (
-        sharded.groupBy("shard").agg(F.count(F.lit(1)).alias("n_rows")).collect()
-    )
-    sharded.unpersist()
-    spark = df.sparkSession
-    mdf = spark.createDataFrame(
-        sorted([(int(r.shard), int(r.n_rows)) for r in manifest]),
-        "shard: int, n_rows: long",
-    )
-    mdf.coalesce(1).write.mode("overwrite").parquet(out_path + "/_shard_manifest")
-    return mdf
-
-
-def write_tiered_corpus(df: DataFrame, out_path: str) -> DataFrame:
-    """Tier-partitioned corpus layout — the sink after per-doc tier
-    extraction (``tier_extract``): hive-partitioned parquet by
-    (tier, lang) so downstream mixing reads ONLY the tier/lang cells it
-    samples from (partition pruning does the work a filter would
-    otherwise re-scan the corpus for). One shuffle (the repartition on
-    the partition key co-locates each cell into one writer task so
-    small cells produce one file, not one per upstream task), then the
-    partitioned write. Returns the per-cell manifest
-    (tier, lang, n_docs, total_words) computed from the same shuffled
-    frame — the mixing planner's input (see ``q_mix_weights``), and it
-    cannot drift from the data."""
-    tiered = df.repartition("tier", "lang").persist()
-    tiered.write.mode("overwrite").partitionBy("tier", "lang").parquet(out_path)
-    cells = (
-        tiered.groupBy("tier", "lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_words").alias("total_words"),
-        )
-        .collect()
-    )
-    tiered.unpersist()
-    spark = df.sparkSession
-    mdf = spark.createDataFrame(
-        sorted([(r.tier, r.lang, int(r.n_docs), int(r.total_words)) for r in cells]),
-        "tier: string, lang: string, n_docs: long, total_words: long",
-    )
-    mdf.coalesce(1).write.mode("overwrite").parquet(out_path + "/_cell_manifest")
-    return mdf
-
-
 def write_bucketed_table(
     df: DataFrame, table: str, key: str, n_buckets: int = 16
 ) -> None:

@@ -540,7 +540,9 @@ def _decode_prog_scan(b, pos, frame, scomp, ss, se, ah, al, huff_dc, huff_ac, dr
         _prog_dc_scan(reader, frame, scomp, ah, al, huff_dc, dri, geom, state)
     else:
         c = scomp[0]
-        if ah == 0 and c["ta"] not in huff_ac:
+        # refinement scans (ah > 0) Huffman-decode their run/size
+        # symbols too, so every AC scan needs its table
+        if c["ta"] not in huff_ac:
             raise JpegError("jpeg: missing table")
         _prog_ac_scan(reader, c, ss, se, ah, al, huff_ac, dri, geom, state)
     return reader.pos
@@ -587,7 +589,7 @@ def _prog_dc_block(reader, blk, si, c, ah, al, huff_dc, pred):
 def _prog_ac_scan(reader, c, ss, se, ah, al, huff_ac, dri, geom, state):
     nby, nbx = geom["nb"][c["ci"]]
     coefs = state[c["ci"]]
-    ac_tbl = huff_ac.get(c["ta"])
+    ac_tbl = huff_ac[c["ta"]]
     eobrun = 0
     n = 0
     for by in range(nby):

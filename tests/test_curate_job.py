@@ -3,7 +3,21 @@ tiered + sharded layouts, metrics consistent across all three."""
 
 import os
 
+import pytest
+from pyspark.sql import functions as F
+
 from oct_report_ocr_spark.jobs.curate_job import run
+
+from .conftest import SF_SMOKE
+
+DOCS = os.path.join(SF_SMOKE, "documents.parquet")
+
+
+@pytest.fixture(scope="module")
+def curated(spark, tmp_path_factory):
+    """One 4-shard run over the test corpus: (output, stats)."""
+    out = str(tmp_path_factory.mktemp("curated") / "out")
+    return out, run(spark, DOCS, out, n_shards=4)
 
 
 def test_curate_job_parquet_end_to_end(spark, tmp_path):
@@ -169,3 +183,70 @@ def test_curate_resume_with_mix_target_is_restart_invariant(spark, tmp_path):
     stats2 = run(spark, inp, out, mix_target=100)
     assert stats2["tiers"] == full["tiers"]
     assert _final_rows(spark, out) == _final_rows(spark, ref)
+
+
+def test_shard_sink_deterministic(spark, tmp_path, curated):
+    """The shard layout: membership follows pmod(xxhash64(doc_id), n),
+    is the same when the input arrives in another partitioning (the
+    retry-stability contract), stays balanced, and the shard manifest
+    equals the data."""
+    out_a, stats_a = curated
+    inp_b = str(tmp_path / "docs_13")
+    spark.read.parquet(DOCS).repartition(13).write.parquet(inp_b)
+    out_b = str(tmp_path / "b")
+    stats_b = run(spark, inp_b, out_b, n_shards=4)
+    assert stats_a["shards"] == stats_b["shards"]
+    total = stats_a["rows_out"]
+    assert sum(stats_a["shards"].values()) == total
+    assert set(stats_a["shards"]) <= set(range(4))
+    # xxhash64 sharding keeps shards balanced (no shard > 2x the mean)
+    assert max(stats_a["shards"].values()) <= 2 * total / 4
+    back_a = spark.read.parquet(os.path.join(out_a, "shards"))
+    back_b = spark.read.parquet(os.path.join(out_b, "shards"))
+    rows_a = {(r.shard, r.doc_id) for r in back_a.select("shard", "doc_id").collect()}
+    rows_b = {(r.shard, r.doc_id) for r in back_b.select("shard", "doc_id").collect()}
+    assert rows_a == rows_b
+    # membership matches the documented rule: pmod(xxhash64(key), n)
+    mismatch = (
+        back_a.withColumn("want", F.pmod(F.xxhash64("doc_id"), F.lit(4)).cast("int"))
+        .filter(F.col("shard") != F.col("want"))
+        .count()
+    )
+    assert mismatch == 0
+    # the manifest on disk equals the data and the returned stats
+    man = spark.read.parquet(os.path.join(out_a, "_manifests", "shards")).collect()
+    data = back_a.groupBy("shard").count().collect()
+    assert sorted((r.shard, r.n_rows) for r in man) == sorted(tuple(r) for r in data)
+    assert {r.shard: r.n_rows for r in man} == stats_a["shards"]
+
+
+def test_tiered_sink_layout(spark, curated):
+    """The tiered layout: hive (tier, lang) dirs, one per manifest cell;
+    a tier/lang read prunes to its cell; the cell manifest equals the
+    data."""
+    out, stats = curated
+    tiered = os.path.join(out, "tiered")
+    man = spark.read.parquet(os.path.join(out, "_manifests", "cells")).collect()
+    assert sum(r.n_docs for r in man) == spark.read.parquet(tiered).count()
+    assert {r.tier for r in man} <= {"high", "mid", "low"}
+    # hive partition dirs exist per manifest cell
+    for r in man:
+        assert os.path.isdir(os.path.join(tiered, f"tier={r.tier}", f"lang={r.lang}"))
+    # a tier/lang read prunes to that cell and matches the manifest
+    hi = man[0]
+    back = spark.read.parquet(tiered).filter(
+        (F.col("tier") == hi.tier) & (F.col("lang") == hi.lang)
+    )
+    assert back.count() == hi.n_docs
+    # partition pruning visible in the plan: scan carries partition filters
+    plan = back._jdf.queryExecution().executedPlan().toString()
+    assert "PartitionFilters" in plan
+    # the manifest on disk equals the data and the returned stats
+    data = (
+        spark.read.parquet(tiered)
+        .groupBy("tier", "lang")
+        .agg(F.count(F.lit(1)).alias("n_docs"), F.sum("n_words").alias("total_words"))
+        .collect()
+    )
+    assert sorted(map(tuple, man)) == sorted(map(tuple, data))
+    assert {f"{r.tier}/{r.lang}": r.n_docs for r in man} == stats["tiers"]

@@ -199,6 +199,26 @@ def test_rerun_of_a_committed_sink_commits_nothing(spark, corpus, tmp_path):
     assert extract_job.read_sink(spark, out, skip=[0, 1, 2, 3]).count() == 0
 
 
+def test_duplicate_manifest_row_counts_once(spark, corpus, tmp_path):
+    """A bucket whose manifest row appears twice (two runs committing
+    one output) still counts once: the stats equal a recount of the
+    sink."""
+    out = str(tmp_path / "out")
+    extract_job.run(spark, corpus, out, buckets=4, fresh=True)
+    manifests = os.path.join(out, "_manifests")
+    m = spark.read.parquet(manifests)
+    m.filter(F.col("bucket") == 0).write.mode("append").parquet(manifests)
+    assert spark.read.parquet(manifests).count() == 5
+
+    stats = extract_job.run(spark, corpus, out, buckets=4)
+    rows = spark.read.parquet(os.path.join(out, "extracted"))
+    failed = rows.filter(F.col("error").isNotNull()).count()
+    assert stats["buckets_done"] == 4
+    assert stats["rows"] == rows.count()
+    assert stats["failed"] == failed
+    assert stats["ok"] == rows.count() - failed
+
+
 def test_lang_filter_pushed_to_scan(spark, corpus):
     """The routing predicate must reach the parquet reader (S2 analog:
     BigQuery executed the LIKE server-side; Catalyst must push ours)."""

@@ -215,3 +215,31 @@ def test_progressive_corruption_quarantines():
         decode_jpeg(good[:-2])
     with pytest.raises(M.CorruptImage):
         M.decode_image(good[:-20])
+
+
+def _rewrite_refinement_ac_table(stream: bytes, ta: int) -> bytes:
+    """``stream`` with every AC refinement scan (Ss > 0, Ah > 0) naming
+    AC table ``ta``. ``FF DA`` never occurs in entropy-coded data (a
+    data ``FF`` is stuffed as ``FF 00``), so each match is an SOS."""
+    out = bytearray(stream)
+    pos = out.find(b"\xff\xda")
+    while pos >= 0:
+        ns = out[pos + 4]
+        ss, ahal = out[pos + 5 + 2 * ns], out[pos + 7 + 2 * ns]
+        if ss > 0 and ahal >> 4:
+            out[pos + 6] = (out[pos + 6] & 0xF0) | ta  # Td/Ta of the one component
+        pos = out.find(b"\xff\xda", pos + 2)
+    return bytes(out)
+
+
+def test_progressive_refinement_scan_missing_ac_table_quarantines():
+    """A refinement AC scan naming an undefined AC table is a JpegError
+    (quarantine), like a first AC scan, not a crash in the Huffman
+    decoder."""
+    good = M.make_jpeg_progressive(16, 16, seed=3)
+    bad = _rewrite_refinement_ac_table(good, 3)  # only AC table 0 is defined
+    assert bad != good
+    with pytest.raises(JpegError, match="missing table"):
+        decode_jpeg(bad)
+    with pytest.raises(M.CorruptImage):
+        M.decode_image(bad)

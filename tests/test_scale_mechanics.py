@@ -4,8 +4,9 @@ import os
 
 from pyspark.sql import functions as F
 
-from oct_report_ocr_spark.operators.skew import salted_join, write_bucketed
+from oct_report_ocr_spark.operators.skew import salted_join
 from oct_report_ocr_spark.plans.report import plan_checks
+from oct_report_ocr_spark.sources.io import write_bucketed_table
 
 from .conftest import SF_SMOKE
 
@@ -33,8 +34,8 @@ def test_bucketed_join_no_shuffle(spark):
     """Two tables bucketed on the same key join with ZERO exchanges."""
     li = spark.read.parquet(os.path.join(SF_SMOKE, "lineitem.parquet"))
     od = spark.read.parquet(os.path.join(SF_SMOKE, "orders.parquet"))
-    write_bucketed(li.select("l_orderkey", "l_quantity"), "t_li_b", "l_orderkey")
-    write_bucketed(od.select("o_orderkey", "o_totalprice"), "t_od_b", "o_orderkey")
+    write_bucketed_table(li.select("l_orderkey", "l_quantity"), "t_li_b", "l_orderkey", 8)
+    write_bucketed_table(od.select("o_orderkey", "o_totalprice"), "t_od_b", "o_orderkey", 8)
     try:
         a = spark.table("t_li_b")
         b = spark.table("t_od_b")

@@ -148,73 +148,6 @@ def test_audit_render_anchor_fidelity_on_goldens(spark):
     assert checked > 100
 
 
-def test_write_training_shards_deterministic(spark, tmp_path):
-    corpus = ensure_corpus(CACHE, 0.001)
-    docs = spark.read.parquet(corpus).select("url", "lang").withColumn(
-        "doc_id", F.xxhash64("url")
-    )
-    out_a, out_b = str(tmp_path / "shards_a"), str(tmp_path / "shards_b")
-    man_a = src_io.write_training_shards(docs, out_a, n_shards=4).collect()
-    # second run from a differently-partitioned input must produce the
-    # identical shard membership and manifest (retry-stability contract)
-    man_b = src_io.write_training_shards(
-        docs.repartition(13), out_b, n_shards=4
-    ).collect()
-    assert sorted((r.shard, r.n_rows) for r in man_a) == sorted(
-        (r.shard, r.n_rows) for r in man_b
-    )
-    total = docs.count()
-    assert sum(r.n_rows for r in man_a) == total
-    assert {r.shard for r in man_a} <= set(range(4))
-    # xxhash64 sharding keeps shards balanced (no shard > 2x the mean)
-    assert max(r.n_rows for r in man_a) <= 2 * total / 4
-    back_a = spark.read.parquet(out_a)
-    back_b = spark.read.parquet(out_b)
-    rows_a = {(r.shard, r.doc_id) for r in back_a.select("shard", "doc_id").collect()}
-    rows_b = {(r.shard, r.doc_id) for r in back_b.select("shard", "doc_id").collect()}
-    assert rows_a == rows_b
-    # membership matches the documented rule: pmod(xxhash64(key), n)
-    mismatch = (
-        back_a.withColumn(
-            "want", F.pmod(F.xxhash64("doc_id"), F.lit(4)).cast("int")
-        )
-        .filter(F.col("shard") != F.col("want"))
-        .count()
-    )
-    assert mismatch == 0
-    # manifest on disk agrees with the returned frame
-    man_disk = spark.read.parquet(out_a + "/_shard_manifest").collect()
-    assert sorted((r.shard, r.n_rows) for r in man_disk) == sorted(
-        (r.shard, r.n_rows) for r in man_a
-    )
-
-
-def test_write_tiered_corpus(spark, tmp_path):
-    from oct_report_ocr_spark.operators.curation import q_tier_extract
-
-    labeled = q_tier_extract(spark, os.path.join("/root/testdata", "sf0.001"))
-    out = str(tmp_path / "tiered")
-    man = src_io.write_tiered_corpus(labeled, out)
-    rows = man.collect()
-    assert sum(r.n_docs for r in rows) == labeled.count()
-    assert {r.tier for r in rows} <= {"high", "mid", "low"}
-    # hive partition dirs exist per manifest cell
-    for r in rows:
-        assert os.path.isdir(os.path.join(out, f"tier={r.tier}", f"lang={r.lang}"))
-    # a tier/lang read prunes to that cell and matches the manifest
-    hi = rows[0]
-    back = spark.read.parquet(out).filter(
-        (F.col("tier") == hi.tier) & (F.col("lang") == hi.lang)
-    )
-    assert back.count() == hi.n_docs
-    # partition pruning visible in the plan: scan carries partition filters
-    plan = back._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan
-    # manifest on disk matches the returned frame
-    man_disk = spark.read.parquet(out + "/_cell_manifest").collect()
-    assert sorted(map(tuple, man_disk)) == sorted(map(tuple, rows))
-
-
 def test_bucketed_tables_join_without_exchange(spark, tmp_path):
     """The co-located-join contract: joining two tables bucketed on the
     same key/count must plan with ZERO Exchange nodes (and no
