@@ -8,8 +8,9 @@ layout-segmentation stages:
   ``html: bytes`` → unicode with charset sniffing.
 - parse/render (D3): PDF → raster page
   (/root/reference/extract_gcc_report_text_ou.py:52-56) ⇒ here:
-  HTML → flat block stream via ``html.parser`` (stdlib — no lxml, so
-  byte-identity of goldens cannot drift with a C-library version).
+  HTML → flat block stream via a few stdlib ``re`` passes (no lxml or
+  other parser library, so byte-identity of goldens cannot drift with
+  a C-library version).
 - region segmentation (D4): fixed pixel crops
   (/root/reference/extract_gcc_report_text_ou.py:59-64) ⇒ here:
   block-level tag segmentation + text-density / link-density scoring
@@ -25,11 +26,10 @@ dependence, no external libraries.
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass
-from html.parser import HTMLParser
+from html import unescape as _unescape
 
 # Tags that open/close a text block. Flat segmentation: any block-level
-# boundary flushes the current run of text into a Block.
+# boundary ends the current run of text (one chunk of extract_lines).
 _BLOCK_TAGS = frozenset(
     """p div h1 h2 h3 h4 h5 h6 li td th dt dd pre blockquote article
     section main aside header footer nav figure figcaption table tr ul
@@ -48,123 +48,21 @@ _DIGIT_RE = re.compile(r"\d")
 _KEYVAL_RE = re.compile(r"^[^:]{1,60}:\s*\S")
 
 
-@dataclass
-class Block:
-    text: str  # whitespace-normalized
-    n_chars: int
-    n_link_chars: int
-    n_tags: int
-    depth: int
-
-    @property
-    def link_density(self) -> float:
-        return self.n_link_chars / self.n_chars if self.n_chars else 1.0
-
-    @property
-    def text_density(self) -> float:
-        return self.n_chars / (1.0 + self.n_tags)
-
-
-class _BlockParser(HTMLParser):
-    def __init__(self) -> None:
-        super().__init__(convert_charrefs=True)
-        self.blocks: list[Block] = []
-        self._buf: list[str] = []
-        self._ignore_depth = 0
-        self._link_depth = 0
-        self._depth = 0
-        self._n_link_chars = 0
-        self._n_tags = 0
-
-    def _flush(self) -> None:
-        raw = "".join(self._buf)
-        text = _WS_RE.sub(" ", raw).strip()
-        if text:
-            self.blocks.append(
-                Block(
-                    text=text,
-                    n_chars=len(text),
-                    n_link_chars=min(self._n_link_chars, len(text)),
-                    n_tags=self._n_tags,
-                    depth=self._depth,
-                )
-            )
-        self._buf = []
-        self._n_link_chars = 0
-        self._n_tags = 0
-
-    def handle_starttag(self, tag: str, attrs) -> None:  # noqa: ANN001
-        if tag in _IGNORE_TAGS:
-            self._ignore_depth += 1
-            return
-        if self._ignore_depth:
-            return
-        if tag in _BLOCK_TAGS:
-            self._flush()
-            self._depth += 1
-        else:
-            self._n_tags += 1
-        if tag == "a":
-            self._link_depth += 1
-        if tag == "br":
-            self._flush()
-
-    def handle_endtag(self, tag: str) -> None:
-        if tag in _IGNORE_TAGS:
-            self._ignore_depth = max(0, self._ignore_depth - 1)
-            return
-        if self._ignore_depth:
-            return
-        if tag == "a":
-            self._link_depth = max(0, self._link_depth - 1)
-        if tag in _BLOCK_TAGS:
-            self._flush()
-            self._depth = max(0, self._depth - 1)
-
-    def handle_startendtag(self, tag: str, attrs) -> None:  # noqa: ANN001
-        if tag == "br" and not self._ignore_depth:
-            self._flush()
-
-    def handle_data(self, data: str) -> None:
-        if self._ignore_depth:
-            return
-        self._buf.append(data)
-        if self._link_depth:
-            # count normalized-ish chars inside anchors; exactness of the
-            # whitespace accounting doesn't matter, only determinism does
-            self._n_link_chars += len(_WS_RE.sub(" ", data).strip())
-
-    def close(self) -> None:  # type: ignore[override]
-        super().close()
-        self._flush()
-
-
-# --- turbo scanner path ------------------------------------------------------
+# --- segmentation regexes -----------------------------------------------------
 #
-# html.parser dominates extraction CPU (~85% of extract_one in profile).
-# keep_block/extract_lines only consume (text, n_chars, n_link_chars),
-# so the hot path can run entirely in C-level regex passes: remove
+# Segmentation runs entirely in C-level regex passes: remove
 # comments/declarations/ignored subtrees, split at block-tag boundaries,
 # strip inline tags, count anchor text. Differential-tested for
-# identical kept-line output against the HTMLParser path over the full
-# synthetic corpus (tests/test_extract_core.py); the HTMLParser path
-# stays as the semantic arbiter. Known divergences (tag soup like
-# `5 < 6 > 4`, anchors spanning block boundaries) are covered by the
-# differential test — if it passes, behavior is frozen by the goldens.
-
-from html import unescape as _unescape
+# identical kept-line output against an html.parser reference
+# segmenter over the synthetic corpus (tests/test_extract_core.py), the
+# semantic arbiter. Known divergences (tag soup like `5 < 6 > 4`,
+# anchors spanning block boundaries) are covered by the differential
+# test — if it passes, behavior is frozen by the goldens.
 
 _IGNORE_ALT = "|".join(sorted(_IGNORE_TAGS))
 _BLOCK_ALT = "|".join(sorted(_BLOCK_TAGS))
-_COMMENT_RE = re.compile(r"<!--.*?(?:-->|$)", re.S)
-_DECL_RE = re.compile(r"<[!?][^>]*(?:>|$)", re.S)
-_IGNORE_RE = re.compile(
-    rf"<({_IGNORE_ALT})\b[^>]*>.*?(?:</\1[^>]*>|$)", re.S | re.I
-)
-# fused single-pass form of comment → ignore-subtree → declaration
-# removal (one full-text copy instead of three); alternation order
-# mirrors the sequential passes: comments first, so `<!--` never parses
-# as a declaration
+# one pass of comment → ignore-subtree → declaration removal; comments
+# come first in the alternation, so `<!--` never parses as a declaration
 _STRIP_RE = re.compile(
     rf"<!--.*?(?:-->|$)|<({_IGNORE_ALT})\b[^>]*>.*?(?:</\1[^>]*>|$)|<[!?][^>]*(?:>|$)",
     re.S | re.I,
@@ -172,43 +70,6 @@ _STRIP_RE = re.compile(
 _BLOCK_SPLIT_RE = re.compile(rf"</?(?:{_BLOCK_ALT})\b[^>]*>|<br\b[^>]*>", re.I)
 _A_RE = re.compile(r"<a\b[^>]*>(.*?)(?:</a\b[^>]*>|$)", re.S | re.I)
 _TAGSTRIP_RE = re.compile(r"<[a-zA-Z/][^>]*>")
-
-
-def segment_blocks_turbo(html_text: str) -> list[Block]:
-    """C-regex equivalent of ``segment_blocks`` for the fields the
-    boilerplate scorer consumes; n_tags/depth are not computed (0)."""
-    text = _STRIP_RE.sub("", html_text)
-    blocks: list[Block] = []
-    for chunk in _BLOCK_SPLIT_RE.split(text):
-        if not chunk:
-            continue
-        link_chars = 0
-        if "<" in chunk:
-            if "<a" in chunk or "<A" in chunk:
-                for m in _A_RE.finditer(chunk):
-                    inner = _TAGSTRIP_RE.sub("", m.group(1))
-                    if "&" in inner:
-                        inner = _unescape(inner)
-                    # " ".join(s.split()) == _WS_RE.sub(" ", s).strip()
-                    # for every Unicode codepoint (verified exhaustively)
-                    # and is ~4x faster — this normalization is the
-                    # kernel's hottest call (once per block)
-                    link_chars += len(" ".join(inner.split()))
-            chunk = _TAGSTRIP_RE.sub("", chunk)
-        if "&" in chunk:
-            chunk = _unescape(chunk)
-        t = " ".join(chunk.split())
-        if t:
-            blocks.append(
-                Block(
-                    text=t,
-                    n_chars=len(t),
-                    n_link_chars=min(link_chars, len(t)),
-                    n_tags=0,
-                    depth=0,
-                )
-            )
-    return blocks
 
 
 _CHARSET_RE = re.compile(rb"charset\s*=\s*[\"']?([A-Za-z0-9_\-]+)", re.I)
@@ -296,35 +157,6 @@ def decode_html(html: bytes) -> str:
     raise ValueError("undecodable html payload")
 
 
-def segment_blocks(html_text: str) -> list[Block]:
-    """Parse HTML into an ordered flat list of text blocks (D3/D4)."""
-    p = _BlockParser()
-    p.feed(html_text)
-    p.close()
-    return p.blocks
-
-
-def keep_block(b: Block) -> bool:
-    """Main-content classifier (D4 scoring).
-
-    A block survives boilerplate stripping when its link density is low
-    AND it is either long enough to be prose, or short but plausibly a
-    label/value line: digit-bearing, ``key: value``-shaped, or a fully
-    link-free line of ≥8 chars (anchor headings like ``Rim Area``) — the
-    analog of the reference keeping every OCR line, including short
-    value lines like ``Signal Strength 8/10``
-    (extract_gcc_report_text_ou.py:84-103). Link-farm nav/footer chrome
-    has link_density ≈ 1 and is dropped regardless of length.
-    """
-    if b.link_density > MAX_LINK_DENSITY:
-        return False
-    if b.n_chars >= MIN_CONTENT_CHARS:
-        return True
-    if _DIGIT_RE.search(b.text) or _KEYVAL_RE.match(b.text):
-        return True
-    return b.n_link_chars == 0 and b.n_chars >= 8
-
-
 def extract_lines(html_text: str) -> tuple[list[str], int]:
     """Full D3→D5 chain: HTML text → ordered main-content lines.
 
@@ -332,15 +164,21 @@ def extract_lines(html_text: str) -> tuple[list[str], int]:
     the positionally ordered list every rule indexes into
     (extract_gcc_report_text_ou.py:72).
 
-    Fused form of ``segment_blocks_turbo`` + ``keep_block`` (round 2):
-    the keep decision is inlined per chunk so no Block dataclass is
-    constructed on the hot path — measured 1.36× on the dominant
-    extraction stage. ``lc * 3 > n`` is the exact integer form of
+    Main-content classifier (D4 scoring), inlined per chunk: a block
+    survives boilerplate stripping when its link density is at most
+    ``MAX_LINK_DENSITY`` AND it is either long enough to be prose, or
+    short but plausibly a label/value line: digit-bearing,
+    ``key: value``-shaped, or a fully link-free line of ≥8 chars
+    (anchor headings like ``Rim Area``) — the analog of the reference
+    keeping every OCR line, including short value lines like
+    ``Signal Strength 8/10`` (extract_gcc_report_text_ou.py:84-103).
+    Link-farm nav/footer chrome has link density ≈ 1 and is dropped
+    regardless of length. ``lc * 3 > n`` is the exact integer form of
     ``link_density > 1/3``: float(lc)/float(n) rounds the true ratio
     to the same double as float(1)/float(3) whenever lc/n == 1/3, so
     the integer compare and the float compare agree on every input
-    (and the Block-path differential test pins it). The Block-building
-    paths stay as the semantic arbiter for that test."""
+    (tests/test_extract_core.py pins it against the html.parser
+    reference segmenter)."""
     text = _STRIP_RE.sub("", html_text)
     lines: list[str] = []
     total = 0

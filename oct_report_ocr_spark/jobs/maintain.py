@@ -7,9 +7,9 @@ Without a table format (Iceberg unavailable in this environment —
 README probe), the failure windows are:
 
 - a writer crashes AFTER writing a bucket's data but BEFORE its
-  manifest row → an ORPHAN bucket (resume re-runs and dynamically
-  overwrites it, but a bucket that later falls out of scope — e.g. a
-  narrowed lang filter — would linger as unaccounted data);
+  manifest row → an ORPHAN bucket (the next commit to the sink
+  removes every orphan before it writes, but until then it lingers
+  as unaccounted data);
 - data files lost/corrupted after commit → a MISSING bucket or a
   CHECKSUM_MISMATCH against the manifest's order-insensitive
   content checksum.

@@ -10,8 +10,10 @@ shard). The commit protocol (D10):
 
 1. the caller drops the units :func:`committed` returns from its rows
    and lays the rest out for the write;
-2. :func:`commit` dynamic-partition-overwrites the pending units, so a
-   unit a crash left partial is rewritten whole, never appended to;
+2. :func:`commit` removes every unit directory with no manifest row
+   (a crash's partial write or a stray copy), then
+   dynamic-partition-overwrites the pending units, so a unit a crash
+   left partial is rewritten whole, never appended to;
 3. it re-reads the written units (readability verified, not just write
    success) and aggregates them per unit in one ``collect``;
 4. it appends those rows to the manifest, strictly after the data.
@@ -75,17 +77,10 @@ def committed(spark: SparkSession, sink: Sink, output: str) -> dict:
     return {} if m is None else {sink.key(r): r for r in m.collect()}
 
 
-def read(spark: SparkSession, sink: Sink, output: str, skip=()) -> DataFrame:
-    """The rows of the sink at ``output`` (``sink.ddl``), leaving out
-    the units whose keys are in ``skip``.
-
-    Spark hands a directory listing to a distributed job once the
-    directories outnumber ``parallelPartitionDiscovery.threshold`` (32),
-    and infers a parquet schema with another job; at 64 buckets that is
-    a 64-task job for a few ms of listing. Here the driver lists the
-    unit directories through the Hadoop FileSystem of the path, Spark
-    lists the files in each on the driver too, and the schema is the
-    known one."""
+def _unit_dirs(spark: SparkSession, sink: Sink, output: str, skip=()) -> list[str]:
+    """The unit directories of the sink at ``output`` whose keys are not
+    in ``skip``, listed on the driver through the Hadoop FileSystem of
+    the path."""
     hadoop = spark._jvm.org.apache.hadoop.fs
     data_path = os.path.join(output, sink.data_dir)
     pattern = hadoop.Path(data_path, "/".join(f"{u}=*" for u in sink.units))
@@ -97,8 +92,24 @@ def read(spark: SparkSession, sink: Sink, output: str, skip=()) -> DataFrame:
         names = path.toUri().getPath().split("/")[-len(sink.units) :]
         if tuple(n.partition("=")[2] for n in names) not in skipped:
             dirs.append(os.path.join(data_path, *names))
+    return dirs
+
+
+def read(spark: SparkSession, sink: Sink, output: str, skip=()) -> DataFrame:
+    """The rows of the sink at ``output`` (``sink.ddl``), leaving out
+    the units whose keys are in ``skip``.
+
+    Spark hands a directory listing to a distributed job once the
+    directories outnumber ``parallelPartitionDiscovery.threshold`` (32),
+    and infers a parquet schema with another job; at 64 buckets that is
+    a 64-task job for a few ms of listing. Here the driver lists the
+    unit directories through the Hadoop FileSystem of the path, Spark
+    lists the files in each on the driver too, and the schema is the
+    known one."""
+    dirs = _unit_dirs(spark, sink, output, skip)
     if not dirs:
         return spark.createDataFrame([], sink.ddl)
+    data_path = os.path.join(output, sink.data_dir)
     threshold = "spark.sql.sources.parallelPartitionDiscovery.threshold"
     with conf_override(spark, threshold, str(len(dirs))):
         return spark.read.schema(sink.ddl).option("basePath", data_path).parquet(*sorted(dirs))
@@ -110,6 +121,14 @@ def commit(
     """Write ``pending`` (rows of the units not in ``prior``, laid out
     by the caller), verify it and commit its manifest rows. Returns the
     committed manifest rows by unit key: ``prior`` plus the new ones."""
+    # a unit directory with no manifest row is not committed: a crashed
+    # run's partial write or a stray copy. Removing every one of them
+    # first (a driver-side listing, no Spark job) means the verification
+    # re-read below sees exactly the units this call writes.
+    hadoop = spark._jvm.org.apache.hadoop.fs
+    for d in _unit_dirs(spark, sink, output, skip=prior):
+        path = hadoop.Path(d)
+        path.getFileSystem(spark._jsc.hadoopConfiguration()).delete(path, True)
     # dynamic overwrite: a retried pending unit replaces its partial
     # files instead of appending duplicates (idempotent re-run)
     with conf_override(spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"):

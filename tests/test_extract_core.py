@@ -8,10 +8,21 @@ the deterministic corpus generator.
 
 import json
 import os
+from dataclasses import dataclass
+from html.parser import HTMLParser
 
 import pytest
 
 from oct_report_ocr_spark.extract import extract_one
+from oct_report_ocr_spark.extract.htmlseg import (
+    _BLOCK_TAGS,
+    _DIGIT_RE,
+    _IGNORE_TAGS,
+    _KEYVAL_RE,
+    _WS_RE,
+    MAX_LINK_DENSITY,
+    MIN_CONTENT_CHARS,
+)
 from oct_report_ocr_spark.synth.gen_corpus import make_doc
 
 from .conftest import FIXTURES
@@ -99,10 +110,135 @@ def test_extraction_is_pure():
     assert r1 == r2
 
 
+# --- html.parser reference segmenter ----------------------------------------
+#
+# The semantic arbiter for extract_lines: a stdlib html.parser walk that
+# builds one Block per block-level run of text and scores it with the
+# same thresholds. Production segments with regex passes only
+# (htmlseg.extract_lines); this reference exists to test it.
+
+
+@dataclass
+class Block:
+    text: str  # whitespace-normalized
+    n_chars: int
+    n_link_chars: int
+    n_tags: int
+    depth: int
+
+    @property
+    def link_density(self) -> float:
+        return self.n_link_chars / self.n_chars if self.n_chars else 1.0
+
+
+class _BlockParser(HTMLParser):
+    def __init__(self) -> None:
+        super().__init__(convert_charrefs=True)
+        self.blocks: list[Block] = []
+        self._buf: list[str] = []
+        self._ignore_depth = 0
+        self._link_depth = 0
+        self._depth = 0
+        self._n_link_chars = 0
+        self._n_tags = 0
+
+    def _flush(self) -> None:
+        raw = "".join(self._buf)
+        text = _WS_RE.sub(" ", raw).strip()
+        if text:
+            self.blocks.append(
+                Block(
+                    text=text,
+                    n_chars=len(text),
+                    n_link_chars=min(self._n_link_chars, len(text)),
+                    n_tags=self._n_tags,
+                    depth=self._depth,
+                )
+            )
+        self._buf = []
+        self._n_link_chars = 0
+        self._n_tags = 0
+
+    def handle_starttag(self, tag: str, attrs) -> None:  # noqa: ANN001
+        if tag in _IGNORE_TAGS:
+            self._ignore_depth += 1
+            return
+        if self._ignore_depth:
+            return
+        if tag in _BLOCK_TAGS:
+            self._flush()
+            self._depth += 1
+        else:
+            self._n_tags += 1
+        if tag == "a":
+            self._link_depth += 1
+        if tag == "br":
+            self._flush()
+
+    def handle_endtag(self, tag: str) -> None:
+        if tag in _IGNORE_TAGS:
+            self._ignore_depth = max(0, self._ignore_depth - 1)
+            return
+        if self._ignore_depth:
+            return
+        if tag == "a":
+            self._link_depth = max(0, self._link_depth - 1)
+        if tag in _BLOCK_TAGS:
+            self._flush()
+            self._depth = max(0, self._depth - 1)
+
+    def handle_startendtag(self, tag: str, attrs) -> None:  # noqa: ANN001
+        if tag == "br" and not self._ignore_depth:
+            self._flush()
+
+    def handle_data(self, data: str) -> None:
+        if self._ignore_depth:
+            return
+        self._buf.append(data)
+        if self._link_depth:
+            # count normalized-ish chars inside anchors; exactness of the
+            # whitespace accounting doesn't matter, only determinism does
+            self._n_link_chars += len(_WS_RE.sub(" ", data).strip())
+
+    def close(self) -> None:  # type: ignore[override]
+        super().close()
+        self._flush()
+
+
+def segment_blocks(html_text: str) -> list[Block]:
+    """Parse HTML into an ordered flat list of text blocks (D3/D4)."""
+    p = _BlockParser()
+    p.feed(html_text)
+    p.close()
+    return p.blocks
+
+
+def keep_block(b: Block) -> bool:
+    """Main-content classifier (D4 scoring).
+
+    A block survives boilerplate stripping when its link density is low
+    AND it is either long enough to be prose, or short but plausibly a
+    label/value line: digit-bearing, ``key: value``-shaped, or a fully
+    link-free line of ≥8 chars (anchor headings like ``Rim Area``) — the
+    analog of the reference keeping every OCR line, including short
+    value lines like ``Signal Strength 8/10``
+    (extract_gcc_report_text_ou.py:84-103). Link-farm nav/footer chrome
+    has link_density ≈ 1 and is dropped regardless of length.
+    """
+    if b.link_density > MAX_LINK_DENSITY:
+        return False
+    if b.n_chars >= MIN_CONTENT_CHARS:
+        return True
+    if _DIGIT_RE.search(b.text) or _KEYVAL_RE.match(b.text):
+        return True
+    return b.n_link_chars == 0 and b.n_chars >= 8
+
+
 def test_turbo_scanner_matches_htmlparser_reference():
-    """The C-regex turbo segmenter must agree with the HTMLParser-based
-    reference path on every keep-relevant field, across the corpus
-    (including dirty/huge docs). The HTMLParser path is the arbiter."""
+    """The regex segmenter (extract_lines) must agree with the
+    html.parser reference segmenter on the kept lines and the block
+    count, across the corpus (including dirty/huge docs). The
+    reference is the arbiter."""
     from oct_report_ocr_spark.extract import htmlseg
 
     checked = 0
@@ -114,28 +250,18 @@ def test_turbo_scanner_matches_htmlparser_reference():
             text = htmlseg.decode_html(d["html"])
         except (ValueError, UnicodeDecodeError):
             continue
-        ref = htmlseg.segment_blocks(text)
-        turbo = htmlseg.segment_blocks_turbo(text)
-        assert [
-            (b.text, b.n_chars, b.n_link_chars, htmlseg.keep_block(b)) for b in ref
-        ] == [
-            (b.text, b.n_chars, b.n_link_chars, htmlseg.keep_block(b)) for b in turbo
-        ], d["url"]
-        # the fused hot path (extract_lines) must agree with the
-        # Block-building arbiter on both outputs
+        ref = segment_blocks(text)
         lines, n_blocks = htmlseg.extract_lines(text)
-        assert lines == [b.text for b in turbo if htmlseg.keep_block(b)], d["url"]
-        assert n_blocks == len(turbo), d["url"]
+        assert lines == [b.text for b in ref if keep_block(b)], d["url"]
+        assert n_blocks == len(ref), d["url"]
         checked += 1
     assert checked > 1000
 
 
 def test_link_density_boundary_exact():
-    """lc*3 > n (fused) must agree with lc/n > 1/3 (Block path) at the
-    exact boundary: a 30-char line with exactly 10 link chars is KEPT
-    by both (density == 1/3 is not > 1/3)."""
-    from oct_report_ocr_spark.extract.htmlseg import Block, keep_block
-
+    """lc*3 > n (extract_lines) must agree with lc/n > 1/3 (the
+    reference's Block path) at the exact boundary: a 30-char line with
+    exactly 10 link chars is KEPT by both (density == 1/3 is not > 1/3)."""
     for n, lc in [(30, 10), (3, 1), (24, 8), (9, 3)]:
         b = Block(text="x" * n, n_chars=n, n_link_chars=lc, n_tags=0, depth=0)
         assert (lc * 3 > n) == (b.link_density > 1 / 3)

@@ -219,6 +219,29 @@ def test_duplicate_manifest_row_counts_once(spark, corpus, tmp_path):
     assert stats["ok"] == rows.count() - failed
 
 
+def test_resume_ignores_orphan_unit_dir(spark, corpus, tmp_path):
+    """A unit directory with no manifest row (here a stray copy of
+    bucket 0 as bucket 99) is not committed by a resume call: only the
+    units the call writes are verified, counted and added to the
+    manifest."""
+    out = str(tmp_path / "out")
+    fresh = extract_job.run(spark, corpus, out, buckets=8, fresh=True)
+    data = os.path.join(out, "extracted")
+    shutil.copytree(os.path.join(data, "bucket=0"), os.path.join(data, "bucket=99"))
+    manifests = os.path.join(out, "_manifests")
+    m = spark.read.parquet(manifests)
+    kept = m.filter(F.col("bucket") != 1).collect()
+    shutil.rmtree(manifests)
+    spark.createDataFrame(kept, m.schema).write.parquet(manifests)
+
+    stats = extract_job.run(spark, corpus, out, buckets=8)
+    assert stats["resumed_buckets_skipped"] == 7
+    assert stats["buckets_done"] == 8
+    assert stats["rows"] == fresh["rows"]
+    assert spark.read.parquet(manifests).filter(F.col("bucket") == 99).count() == 0
+    assert spark.read.parquet(data).count() == fresh["rows"]
+
+
 def test_lang_filter_pushed_to_scan(spark, corpus):
     """The routing predicate must reach the parquet reader (S2 analog:
     BigQuery executed the LIKE server-side; Catalyst must push ours)."""

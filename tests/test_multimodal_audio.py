@@ -178,9 +178,9 @@ def test_audio_envelope_exact():
 
 def test_wav_real_decode_in_distributed_path(spark):
     """synth_media's every-5th audio rows carry real WAVs (rotating
-    widths AND codecs — r05 extends the rotation to G.711 and both
-    ADPCM families, which need media_id ≥ 70 to appear); through
-    mapInPandas they must produce REAL features (sample-rate prefix),
+    widths AND codecs — G.711 and both ADPCM families need
+    media_id ≥ 70 to appear); through the media kernel they must produce
+    REAL features (sample-rate prefix),
     corrupt WAVs must quarantine as CorruptAudio, and opaque audio
     bytes must keep the digest fake."""
     media = M.synth_media(spark, n=128)
@@ -195,7 +195,7 @@ def test_wav_real_decode_in_distributed_path(spark):
             corrupt += 1
         elif i % 5 == 0:
             assert r.decode_error is None
-            bits, fmt = ((8, "pcm"), (16, "pcm"), (24, "pcm"), (32, "float"), (8, "mulaw"), (8, "alaw"), (4, "ima_adpcm"), (4, "ms_adpcm"))[(i // 15) % 8]
+            bits, fmt = M.SYNTH_WAV_FORMATS[(i // 15) % len(M.SYNTH_WAV_FORMATS)]
             want = M.audio_feature(
                 M.make_wav(32 + i * 3, rate=8000 + 100 * i, channels=1 + i % 2,
                            seed=i, bits=bits, fmt=fmt)
@@ -226,7 +226,7 @@ def test_envelope_distributed_with_quarantine(spark):
             corrupt += 1
         elif i % 5 == 0:
             assert r.decode_error is None
-            bits, fmt = ((8, "pcm"), (16, "pcm"), (24, "pcm"), (32, "float"), (8, "mulaw"), (8, "alaw"), (4, "ima_adpcm"), (4, "ms_adpcm"))[(i // 15) % 8]
+            bits, fmt = M.SYNTH_WAV_FORMATS[(i // 15) % len(M.SYNTH_WAV_FORMATS)]
             rate, ch, n, env = M.audio_envelope(
                 M.make_wav(32 + i * 3, rate=8000 + 100 * i, channels=1 + i % 2,
                            seed=i, bits=bits, fmt=fmt),

@@ -5,23 +5,48 @@ decode, never a silent fake-feature fallback when the magic is one
 this container actually recognizes.
 
 Grid axes: row ``kind`` (image / audio) × payload format (BMP, P6-PPM,
-PNG, baseline JPEG, RIFF/WAVE, unknown). Plus header-vs-payload
-confusion inside WAV (PCM claim over float data, float claim with
-illegal width, inconsistent block align) and a JPEG truncated at SOS.
+PNG, JPEG, RIFF/WAVE, unknown). Plus header-vs-payload confusion
+inside WAV (PCM claim over float data, float claim with illegal
+width, inconsistent block align), and the formats recognized but not
+decoded here (JPEG, MP3-in-WAV): DecodeUnavailable.
 """
 
+import os
 import struct
 
 import pytest
 
 from oct_report_ocr_spark.sources import multimodal as M
 
+from .conftest import FIXTURES
+
+# minimal JPEG header: the magic is all the sniff and the decoders
+# look at
+JPEG = b"\xff\xd8\xff\xe0\x00\x10JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00\xff\xd9"
+
 IMAGE_PAYLOADS = {
     "bmp": lambda: M.make_bmp(6, 4, seed=1),
     "ppm": lambda: M.make_ppm(6, 4, seed=2),
     "png": lambda: M.make_png(6, 4, seed=3),
-    "jpeg": lambda: M.make_jpeg(16, 12, seed=4),
+    "jpeg": lambda: JPEG,
 }
+
+
+def _raw_wav(tag: int, bits: int, block: int, data: bytes) -> bytes:
+    """A mono 8 kHz RIFF/WAVE with the given format tag."""
+    fmt = struct.pack("<HHIIHH", tag, 1, 8000, 8000 * block, block, bits)
+    chunks = (
+        b"fmt " + struct.pack("<I", len(fmt)) + fmt
+        + b"data" + struct.pack("<I", len(data)) + data + b"\x00" * (len(data) & 1)
+    )
+    return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
+
+
+# formats recognized but not decoded here: a real JPEG file and an
+# MP3-in-WAV (0x0055) payload
+with open(os.path.join(FIXTURES, "multimodal", "rgb_420_20x14.jpg"), "rb") as _f:
+    UNDECODED_IMAGES = {"jpeg": _f.read()}
+UNDECODED_AUDIO = {"mp3": _raw_wav(0x0055, 16, 2, bytes(64))}
 
 
 # ---- cross-kind: recognized magic in the wrong row kind ----
@@ -93,27 +118,32 @@ def test_wav_block_align_mismatch_quarantines():
         M.decode_audio(bytes(w))
 
 
-def test_jpeg_truncated_at_sos_quarantines():
-    b = M.make_jpeg(16, 12, seed=1)
-    i = b.index(b"\xff\xda")
-    with pytest.raises(M.CorruptImage, match="SOS|truncated"):
-        M.decode_image(b[:i])
-    with pytest.raises(M.CorruptImage):
-        M.decode_image(b[: i + 6])
+def test_undecoded_formats_are_decode_unavailable():
+    """JPEG images and MP3-in-WAV payloads have no decoder here: the
+    pure decoders raise DecodeUnavailable, never CorruptImage /
+    CorruptAudio or a decode."""
+    for payload in UNDECODED_IMAGES.values():
+        for decode in (M.decode_image, M._decode_rgb_array, lambda b: M.sample_frames(b, 2)):
+            with pytest.raises(M.DecodeUnavailable):
+                decode(payload)
+    for payload in UNDECODED_AUDIO.values():
+        for decode in (M._wav_samples, M.decode_audio, lambda b: M.audio_envelope(b, 4)):
+            with pytest.raises(M.DecodeUnavailable):
+                decode(payload)
 
 
 # ---- the distributed path: quarantine column, not exceptions ----
 
 
 def test_featurize_confusion_grid_lands_in_quarantine(spark):
-    """Through the real mapInPandas kernel: mislabeled rows produce
+    """Through the real media kernel: mislabeled rows produce
     decode_error rows with the right class name; the job never fails,
     correctly-labeled neighbors in the same batch are untouched."""
     rows = [
         (1, "image", M.make_wav(50), "decode:CorruptImage"),
         (2, "audio", M.make_png(6, 4, seed=3), "decode:CorruptAudio"),
-        (3, "audio", M.make_jpeg(16, 12, seed=4), "decode:CorruptAudio"),
-        (4, "image", M.make_jpeg(16, 12, seed=1)[:40], "decode:CorruptImage"),
+        (3, "audio", JPEG, "decode:CorruptAudio"),
+        (4, "image", M.make_bmp(6, 4, seed=1)[:40], "decode:CorruptImage"),
         (5, "image", M.make_png(6, 4, seed=3), None),  # control
         (6, "audio", M.make_wav(50), None),  # control
         (7, "image", b"\xff\xfb\x90\x00" + bytes(64), None),  # unknown → fake
@@ -129,3 +159,31 @@ def test_featurize_confusion_grid_lands_in_quarantine(spark):
             assert got[media_id].feature is not None
         else:
             assert got[media_id].feature is None
+
+
+def test_undecoded_formats_through_the_stages(spark):
+    """Through the stages, an undecoded format takes the fake-feature
+    path in featurize (decode_error null) and quarantines as
+    decode:DecodeUnavailable in resize / envelope; a JPEG magic in an
+    audio row is still mislabeled data (CorruptAudio)."""
+    rows = [(f"image-{k}", "image", b) for k, b in UNDECODED_IMAGES.items()]
+    rows += [(f"audio-{k}", "audio", b) for k, b in UNDECODED_AUDIO.items()]
+    rows += [(f"mislabeled-{k}", "audio", b) for k, b in UNDECODED_IMAGES.items()]
+    df = spark.createDataFrame(
+        [(i, k, bytearray(b), None) for i, (_, k, b) in enumerate(rows)],
+        schema=M.MEDIA_SCHEMA_DDL,
+    )
+    feats = {r.media_id: r for r in M.featurize(df, partitions=2).collect()}
+    staged = {
+        r.media_id: r.decode_error
+        for stage in (M.resize(df, 4, 4, partitions=2), M.envelope(df, n_windows=4))
+        for r in stage.collect()
+    }
+    for i, (name, _, payload) in enumerate(rows):
+        if name.startswith("mislabeled"):
+            assert feats[i].decode_error == "decode:CorruptAudio", name
+            assert staged[i] == "decode:CorruptAudio", name
+        else:
+            assert feats[i].decode_error is None, name
+            assert list(feats[i].feature) == pytest.approx(M.fake_feature(payload)), name
+            assert staged[i] == "decode:DecodeUnavailable", name

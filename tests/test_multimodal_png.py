@@ -127,7 +127,7 @@ def test_png_resize_and_rgb_array():
 def test_png_real_decode_in_distributed_path(spark):
     """synth_media's every-5th decodable image rows now rotate
     BMP/PPM/PNG; the PNG rows must produce REAL features (width/height
-    prefix), not the digest fake, through mapInPandas."""
+    prefix), not the digest fake, through the media kernel."""
     media = M.synth_media(spark, n=64)
     feats = {r.media_id: r for r in M.featurize(media, partitions=4).collect()}
     png_rows = 0

@@ -29,7 +29,7 @@ def test_multimodal_featurize(spark):
 
 
 def test_multimodal_real_decode_in_distributed_path(spark):
-    """VERDICT r01 item 9: the BMP/PPM kernels run inside mapInPandas —
+    """VERDICT r01 item 9: the BMP/PPM/PNG/GIF kernels run inside the media kernel —
     decoded rows carry true (w, h, mean-RGB) features, corrupt images
     land in quarantine, non-decodable kinds keep the fake path."""
     media = multimodal.synth_media(spark, n=64)
@@ -44,15 +44,8 @@ def test_multimodal_real_decode_in_distributed_path(spark):
             corrupt += 1
         elif i % 5 == 0:
             w, h = 8 + i % 16, 4 + i % 8
-            maker = (
-                multimodal.make_bmp,
-                multimodal.make_ppm,
-                multimodal.make_png,
-                multimodal.make_jpeg,
-                multimodal.make_jpeg_progressive,
-                multimodal.make_gif,
-            )[(i // 15) % 6]
-            payload = maker(w, h, seed=i)
+            makers = multimodal.SYNTH_IMAGE_MAKERS
+            payload = makers[(i // 15) % len(makers)](w, h, seed=i)
             want = multimodal.image_feature(payload)
             # array<float> is float32 — compare at float32 precision
             assert abs(r.feature[0] - w) < 1e-3 and abs(r.feature[1] - h) < 1e-3
@@ -70,9 +63,8 @@ def test_multimodal_decode_stub_raises():
     # corrupt-but-claimed-supported raises CorruptImage, not Unavailable
     with pytest.raises(multimodal.CorruptImage):
         multimodal.decode_image(multimodal.make_bmp(4, 4)[:30])
-    # a truncated JPEG is now a CORRUPT supported format (the baseline
-    # decoder is real since round 4), no longer an unavailable codec
-    with pytest.raises(multimodal.CorruptImage):
+    # JPEG has no decoder here: even a truncated one is unavailable
+    with pytest.raises(multimodal.DecodeUnavailable):
         multimodal.decode_image(b"\xff\xd8\xff")
 
 
@@ -110,14 +102,8 @@ def test_resize_distributed_with_quarantine(spark):
             assert r.decode_error is None
             assert (r.src_width, r.src_height) == (8 + i % 16, 4 + i % 8)
             assert (r.width, r.height) == (4, 4)
-            maker = (
-                multimodal.make_bmp,
-                multimodal.make_ppm,
-                multimodal.make_png,
-                multimodal.make_jpeg,
-                multimodal.make_jpeg_progressive,
-                multimodal.make_gif,
-            )[(i // 15) % 6]
+            makers = multimodal.SYNTH_IMAGE_MAKERS
+            maker = makers[(i // 15) % len(makers)]
             want = multimodal.resize_image(
                 maker(8 + i % 16, 4 + i % 8, seed=i), 4, 4
             )
@@ -149,7 +135,8 @@ def test_frame_sample_distributed(spark):
             corrupt += 1
         elif i % 5 == 0:
             w, h, n = 4 + i % 8, 2 + i % 4, 5 + i % 7
-            vmaker = (multimodal.make_fvid, multimodal.make_gif_video)[(i // 15) % 2]
+            vmakers = multimodal.SYNTH_VIDEO_MAKERS
+            vmaker = vmakers[(i // 15) % len(vmakers)]
             want = multimodal.sample_frames(vmaker(w, h, n, seed=i), 2)
             got = sorted(rs, key=lambda r: r.frame_idx)
             assert [r.frame_idx for r in got] == [x[0] for x in want] == list(range(0, n, 2))
