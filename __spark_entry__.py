@@ -18,7 +18,7 @@ _REPO = os.path.dirname(os.path.abspath(__file__))
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: salted-repartition mapInArrow extraction over the
+    """Flagship: scan-aligned mapInArrow extraction over the
     sf0.001 web-page corpus — extracted text + span counts for every
     English document (one row per url, quarantine rows included with
     ``error`` set)."""

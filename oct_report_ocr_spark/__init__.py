@@ -11,7 +11,7 @@ DataFrame pipeline over a Common-Crawl-style web-page table
                  extraction core (the analog of the reference's
                  crop→OCR→rule loop, extract_gcc_report_text_ou.py:40-144)
 - ``jobs/``      the Arrow-vectorized Spark shell around the core:
-                 salted repartition, mapInArrow, quarantine, manifests
+                 scan-aligned mapInArrow, quarantine, manifests
 - ``operators/`` relational operator library (joins, windows, pivots,
                  dedup, similarity, text stats) mirroring SURVEY.md §2
 - ``functions/`` scalar normalizer expressions (logMAR ladder,

@@ -8,31 +8,31 @@ SURVEY.md §3.1), designed for 10¹²-row tables:
    (the ``DocumentTitle like`` analog is ``lang = 'en'``; S2/D1). The
    ``html`` binary column is never read by resume/manifest passes —
    Catalyst prunes it.
-2. **Size-class split** (SURVEY.md §7.3 risk 3): pages above
-   ``LARGE_HTML_BYTES`` go through their own, wider repartition so a
-   run of huge pages can't concentrate in one Arrow batch/partition;
-   both classes run the identical UDF, so the split is invisible in
-   the output.
-3. **Partitioning mode** — default ``scan-aligned`` (no payload
-   shuffle; byte-bounded parquet splits balance the Python stage), or
-   ``salted``: repartition by ``pmod(xxhash64(url), buckets)`` to
-   defeat host-level clustering of page sizes in hostile layouts
-   (crawls store same-site pages adjacently; url-hash scatters them).
-4. **mapInArrow** extraction (jobs/extract_udf.py) — the only Python
+2. **Bucket key**: ``pmod(xxhash64(url), buckets)``, computed in
+   codegen; a resume excludes the committed buckets here, before the
+   Python stage. The extraction stage runs on the scan splits with no
+   payload shuffle: ``spark.sql.files.maxPartitionBytes`` bounds the
+   bytes per task, and Arrow batches are capped by bytes as well as
+   rows (``session.get_spark``), so a run of huge pages degrades to
+   small batches instead of concentrating in one. Measured on 4 cores
+   at 25k documents, this plan beat a url-hash repartition of the full
+   payload by about 2x on the benchmark layout and on files sorted by
+   host or by page size (CHANGES.md).
+3. **mapInArrow** extraction (jobs/extract_udf.py) — the only Python
    stage; everything around it is whole-stage-codegen JVM.
-5. **Idempotent partitioned write** (D10): output is partitioned by
+4. **Idempotent partitioned write** (D10): output is partitioned by
    bucket and committed through ``jobs/sink.py``, the commit protocol
    shared with the curation sinks: a bucket is *completed* only when
    its row appears in the manifest table, which is written strictly
    after the data; restart = drop the committed buckets on the scan
-   side (step 1, before the UDF) and dynamic-partition-overwrite the
+   side (step 2, before the UDF) and dynamic-partition-overwrite the
    rest. The extracted rows are hashed by bucket into ``min(buckets,
    defaultParallelism)`` tasks: each bucket still lands in exactly one
    task, so each bucket still gets one file, but the write runs as one
    wave. With fewer cores than buckets, one task per bucket would run
    in several waves, each task paying Spark's fixed per-task cost
    (scheduling, task deserialization, writer set-up) for a small file.
-6. **Lineage/metrics + manifest commit** (D8/D11): the manifest row
+5. **Lineage/metrics + manifest commit** (D8/D11): the manifest row
    carries per-bucket doc counts, ok/failed, byte totals and an
    order-insensitive content checksum, computed by re-reading the
    *written* files (verifying readability, not just write success).
@@ -50,7 +50,6 @@ from pyspark.sql import functions as F
 from oct_report_ocr_spark.jobs.extract_udf import OUTPUT_DDL, extract_batches
 from oct_report_ocr_spark.jobs.sink import Sink, commit, committed, read
 
-LARGE_HTML_BYTES = 256 * 1024
 INPUT_COLS = ("url", "warc_ts", "html")
 #: the sink under ``output``: bucket-partitioned rows, and the manifest
 #: table committed strictly after them
@@ -59,51 +58,12 @@ MANIFEST_DIR = "_manifests"
 #: the sink's rows: the kernel's output plus the partition column
 SINK_DDL = f"{OUTPUT_DDL}, bucket int"
 
-#: target bytes per salted reduce task (parquet's maxPartitionBytes twin):
-#: the exchange should never hand a Python worker more than one scan
-#: split's worth of payload.
-SALT_TASK_BYTES = 256 * 1024 * 1024
-#: any size estimate at/above this is Catalyst's "stats not computed"
-#: sentinel territory (sizeInBytes defaults to Long.MaxValue), not a
-#: real table size — an exabyte exceeds every corpus this engine targets.
-_ABSURD_BYTES = 1 << 60
-
-
-def salt_width(buckets: int, parallelism: int, est_input_bytes: int | None = None) -> int:
-    """Resolve the salted-exchange width (number of salt keys) for the
-    Python extraction stage, decoupled from the sink bucket count.
-
-    ``max`` of three floors:
-
-    - ``buckets`` — never narrower than the sink layout, so every
-      bucket still receives at least one dedicated reduce task;
-    - ``5 * parallelism`` — the finer-reduce-task rule from the r04
-      per-stage profile (BENCH/salted_profile_r04.log): at 32 cores a
-      160-wide exchange cut shuffle-write serialization enough to lift
-      salted scaling efficiency 0.573 → 0.637, and 5 waves of small
-      tasks also smooth per-page cost variance;
-    - ``ceil(est_input_bytes / SALT_TASK_BYTES)`` — the task-size
-      floor: at 100 TB neither of the above produces enough tasks to
-      keep partitions under ~256 MB of payload each.
-
-    ``est_input_bytes`` that is ``None``, non-positive, or in sentinel
-    territory (``>= 2^60``; Catalyst reports ``Long.MaxValue`` when
-    stats are missing) is ignored — a broken estimate must never size
-    a production exchange.
-    """
-    width = max(int(buckets), 5 * int(parallelism))
-    if est_input_bytes and 0 < est_input_bytes < _ABSURD_BYTES:
-        width = max(width, -(-int(est_input_bytes) // SALT_TASK_BYTES))
-    return width
-
 
 def extract_df(
     docs: DataFrame,
     buckets: int = 64,
     lang: str | None = "en",
     exclude_buckets: list[int] | None = None,
-    mode: str = "scan-aligned",
-    salt_partitions: int | None = None,
 ) -> DataFrame:
     """The logical extraction plan (no sink). Returns one row per input
     document with columns OUTPUT_DDL + ``bucket``.
@@ -112,32 +72,10 @@ def extract_df(
     scan side, so completed buckets cost a hash+filter in codegen, not
     an extraction — and never cross into the Python worker.
 
-    ``mode`` picks the partitioning strategy for the Python stage:
-
-    - ``"scan-aligned"`` (default since round 2 — VERDICT r01 item 6):
-      no shuffle; extraction runs directly on the scan splits. Correct
-      whenever the source is splittable columnar (parquet/Iceberg) —
-      `spark.sql.files.maxPartitionBytes` already bounds BYTES per
-      task, so per-task work is balanced as long as extraction cost is
-      roughly proportional to bytes. At 10¹² docs the payload shuffle
-      is the single largest avoidable cost; measured on this host the
-      mode is both faster absolute and better-scaling (BENCH/
-      BASELINE.md run G: 0.82 vs 0.573 scaling efficiency, ~1.4x
-      throughput at 32 cores; round-2 run A recorded 0.848 vs 0.612) —
-      the default is the structurally superior plan for the
-      input_hint's own table shape, not a benchmark special.
-    - ``"salted"`` (the hostile-layout posture): one explicit
-      repartition on ``pmod(xxhash64(url), buckets)`` with a separate
-      key range for huge pages. Robust to ANY input layout — whole-site
-      dump files, giant-page clustering, sources whose per-byte CPU
-      cost is wildly uneven — at the price of shuffling the full
-      payload once (zstd-compressed; BENCH/BASELINE.md, salted-mode
-      tuning).
-      Output bytes are identical in both modes (the kernel is
-      partitioning-invariant — tested).
+    The plan has no exchange: extraction runs directly on the scan
+    splits. The kernel is partitioning-invariant, so the output rows do
+    not depend on the input layout (tested).
     """
-    if mode not in ("salted", "scan-aligned"):
-        raise ValueError(f"unknown mode: {mode!r}")
     df = docs
     if lang is not None and "lang" in df.columns:
         df = df.filter(F.col("lang") == lang)
@@ -145,33 +83,6 @@ def extract_df(
     df = df.select(*INPUT_COLS).withColumn("bucket", bucket)
     if exclude_buckets:
         df = df.filter(~F.col("bucket").isin(exclude_buckets))
-
-    if mode == "salted":
-        # SINGLE scan + SINGLE shuffle: huge pages (~0.5%) get their own
-        # url-scattered key range ABOVE the normal salt keys, so a run of
-        # multi-MB payloads can't bloat a small-class Arrow batch, while
-        # the plan stays one exchange (a two-branch filter+union would
-        # scan the input twice — measured 2× the scan CPU at sf0.1).
-        #
-        # The exchange width (``salt_partitions``, typically resolved by
-        # :func:`salt_width`) is deliberately DECOUPLED from ``buckets``:
-        # the sink bucket is part of the resume-manifest identity
-        # (completed_buckets keys on pmod(xxhash64(url), buckets)), so
-        # widening the Python stage for parallelism must never change
-        # which bucket a url lands in. When they coincide the salt key
-        # equals the sink bucket and the plan is byte-identical to the
-        # pre-decoupling one.
-        salt = buckets if salt_partitions is None else int(salt_partitions)
-        n_large_keys = max(salt // 4, 8)
-        part_key = (
-            F.when(
-                F.length("html") > LARGE_HTML_BYTES,
-                F.lit(salt)
-                + F.pmod(F.xxhash64(F.col("url"), F.lit(1)), F.lit(n_large_keys)).cast("int"),
-            )
-            .otherwise(F.pmod(F.xxhash64(F.col("url")), F.lit(salt)).cast("int"))
-        )
-        df = df.repartition(salt + n_large_keys, part_key)
     out = df.select(*INPUT_COLS).mapInArrow(extract_batches, schema=OUTPUT_DDL)
     # recompute the bucket for the sink partitioning (cheap codegen hash)
     return out.withColumn("bucket", F.pmod(F.xxhash64(F.col("url")), F.lit(buckets)).cast("int"))
@@ -221,14 +132,8 @@ def run(
     buckets: int = 64,
     lang: str | None = "en",
     fresh: bool = False,
-    mode: str = "scan-aligned",
-    salt_partitions: int | None = None,
 ) -> dict:
-    """Run (or resume) the extraction job. Returns run metrics.
-
-    ``salt_partitions`` (salted mode) widens the Python-stage exchange
-    without touching the sink bucket identity — resolve it with
-    :func:`salt_width`; the CLI does so automatically."""
+    """Run (or resume) the extraction job. Returns run metrics."""
     if fresh and os.path.isdir(output):
         import shutil
 
@@ -237,25 +142,12 @@ def run(
     done = {} if fresh else committed(spark, EXTRACTED, output)
 
     docs = spark.read.parquet(input_path)
-    plan = extract_df(
-        docs,
-        buckets=buckets,
-        lang=lang,
-        exclude_buckets=sorted(done),
-        mode=mode,
-        salt_partitions=salt_partitions,
-    )
-    if mode == "scan-aligned" or (salt_partitions is not None and salt_partitions != buckets):
-        # a bucket-aligned salted run (salt == buckets) arrives with one
-        # bucket per task, so the partitioned write emits one clean file
-        # per bucket; the scan-aligned plan — or a salted plan whose
-        # exchange was widened past the bucket count — would instead
-        # emit up to tasks x buckets tiny files. Hash the EXTRACTED rows
-        # by bucket — this shuffle moves main-content text only, a
-        # fraction of the raw html payload the salted mode shuffles —
-        # into one wave of tasks: every bucket still lands in exactly one
-        # task, so it still gets exactly one file.
-        plan = plan.repartition(min(buckets, spark.sparkContext.defaultParallelism), "bucket")
+    plan = extract_df(docs, buckets=buckets, lang=lang, exclude_buckets=sorted(done))
+    # The scan-aligned plan would write up to tasks x buckets tiny
+    # files. Hash the EXTRACTED rows (main-content text, a fraction of
+    # the raw html payload) by bucket into one wave of tasks: every
+    # bucket still lands in exactly one task, so it gets exactly one file.
+    plan = plan.repartition(min(buckets, spark.sparkContext.defaultParallelism), "bucket")
 
     manifest = commit(spark, EXTRACTED, output, plan, done).values()
     return {
@@ -285,30 +177,9 @@ def main() -> None:
     ap.add_argument("--cores", type=int, default=None)
     ap.add_argument("--lang", default="en")
     ap.add_argument("--fresh", action="store_true")
-    ap.add_argument("--mode", default="scan-aligned", choices=["salted", "scan-aligned"])
-    ap.add_argument(
-        "--salt-partitions",
-        type=int,
-        default=None,
-        help="salted-exchange width (salted mode); default: salt_width(buckets, cores)",
-    )
     args = ap.parse_args()
 
     spark = get_spark(app_name="extract_job", cores=args.cores)
-    salt_partitions = args.salt_partitions
-    if salt_partitions is None and args.mode == "salted":
-        # resolve the exchange width from the session's real parallelism
-        # and the scan's size estimate — never from the sink bucket count
-        parallelism = spark.sparkContext.defaultParallelism
-        try:
-            est_bytes = sum(
-                os.path.getsize(os.path.join(d, f))
-                for d, _, fs in os.walk(args.input)
-                for f in fs
-            ) if os.path.isdir(args.input) else os.path.getsize(args.input)
-        except OSError:
-            est_bytes = None
-        salt_partitions = salt_width(args.buckets, parallelism, est_bytes)
     stats = run(
         spark,
         args.input,
@@ -316,8 +187,6 @@ def main() -> None:
         buckets=args.buckets,
         lang=args.lang or None,
         fresh=args.fresh,
-        mode=args.mode,
-        salt_partitions=salt_partitions,
     )
     print(stats)
 

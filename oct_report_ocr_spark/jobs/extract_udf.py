@@ -10,7 +10,7 @@ two structural fixes SURVEY.md §4 calls out:
   programs are module-level — compiled once per Python worker process
   and amortized over every batch that worker handles.
 - the reference is sequential; here parallelism comes from Spark task
-  scheduling over salted partitions, and the UDF itself stays
+  scheduling over the scan splits, and the UDF itself stays
   order-independent (no state crosses batch or partition boundaries),
   so output bytes are invariant to partitioning (SURVEY.md §5.2(3)).
 """

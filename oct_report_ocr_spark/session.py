@@ -13,6 +13,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+#: shuffle-block zstd level (see ``get_spark``)
+ZSTD_LEVEL = 1
+
 
 @contextlib.contextmanager
 def conf_override(spark: SparkSession, key: str, value: str | None):
@@ -67,19 +70,16 @@ def read_parquet_if_exists(
 def get_spark(
     app_name: str = "oct_report_ocr_spark",
     cores: int | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
-    if shuffle_partitions is None:
-        # match parallelism, not the 200 default — at cluster scale this is
-        # sized to target ~128-256 MB shuffle partitions instead
-        shuffle_partitions = max(cores, 8)
     b = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        # match parallelism, not the 200 default — at cluster scale this is
+        # sized to target ~128-256 MB shuffle partitions instead
+        .config("spark.sql.shuffle.partitions", str(max(cores, 8)))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -93,18 +93,14 @@ def get_spark(
         # worker — row-count-only batching cannot give that guarantee
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "1024")
         .config("spark.sql.execution.arrow.maxBytesPerBatch", "16m")
-        # shuffle-block codec (VERDICT r01 item 6): zstd level 1 beat
-        # the lz4 default on the salted full-payload exchange in 2 of 3
-        # A/B windows, median +11% (31.3k vs 28.1k docs/sec at sf0.4 —
-        # BENCH/BASELINE.md, salted-mode tuning): HTML payloads compress
-        # ~2x better under zstd, and the saved shuffle bytes outweigh the
-        # codec CPU even on tmpfs; on a cluster the byte saving also
-        # halves NVMe/NIC shuffle traffic. Override with SPARK_GRAFT_IO_CODEC.
-        .config(
-            "spark.io.compression.codec",
-            os.environ.get("SPARK_GRAFT_IO_CODEC", "zstd"),
-        )
-        .config("spark.io.compression.zstd.level", "1")
+        # shuffle-block codec: zstd beat the lz4 default by a median +11%
+        # docs/sec on a shuffle of the full html payload, which compresses
+        # ~2x better under zstd (BENCH/BASELINE.md, 32 cores). Not
+        # re-measured against lz4 on the shuffles the engine runs: the
+        # extraction sink's bucket repartition of the extracted text and
+        # the curation and relational exchanges.
+        .config("spark.io.compression.codec", "zstd")
+        .config("spark.io.compression.zstd.level", str(ZSTD_LEVEL))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         # throughput GC measured ~15% faster than G1 on the Arrow-heavy
         # extraction stage (large short-lived buffers, no latency SLO)

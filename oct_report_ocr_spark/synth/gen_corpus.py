@@ -16,8 +16,9 @@ Document mix (by per-doc RNG):
   noise, quadrant + clock-hour sections.
 - ~10% generic article (no extractable fields).
 - ~1.5% dirty rows: empty / truncated / invalid-UTF8 (→ quarantine).
-- ~0.5% huge pages (hundreds of KB) — the size-skew rows that motivate
-  salted repartitioning (SURVEY.md §7.3 risk 3).
+- ~0.5% huge pages (hundreds of KB) — the size-skew rows that the
+  byte-bounded scan splits and Arrow batches must absorb (SURVEY.md
+  §7.3 risk 3).
 - ~8% of docs carry a non-'en' lang tag (filtered out by the job's
   routing predicate, the DocumentTitle-LIKE analog).
 

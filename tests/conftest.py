@@ -14,6 +14,6 @@ CACHE = os.path.join(REPO_ROOT, ".cache")
 def spark():
     from oct_report_ocr_spark.session import get_spark
 
-    s = get_spark(app_name="tests", cores=8, shuffle_partitions=8)
+    s = get_spark(app_name="tests", cores=8)
     yield s
     s.stop()

@@ -1,7 +1,8 @@
 """End-to-end Spark extraction-job tests (SURVEY.md §5.2 items 1-5).
 
-Exercises the real pipeline — scan → salted repartition → mapInArrow →
-partitioned write + manifest — on the deterministic sf0.001 corpus.
+Exercises the real pipeline — scan → mapInArrow → bucket repartition of
+the extracted rows → partitioned write + manifest — on the
+deterministic sf0.001 corpus.
 """
 
 import glob
@@ -119,28 +120,6 @@ def test_partitioning_permutation_invariance(spark, corpus, tmp_path):
     assert sa == sb
 
 
-def test_scan_aligned_run_matches_salted_and_file_layout(spark, corpus, tmp_path, job_out):
-    """run(mode='scan-aligned') must produce the identical row set as
-    the salted run AND one clean file per bucket (the pre-write
-    repartition prevents the tasks x buckets small-file blowup)."""
-    out_ref, _ = job_out
-    out = str(tmp_path / "aligned")
-    stats = extract_job.run(spark, corpus, out, buckets=16, fresh=True, mode="scan-aligned")
-    assert stats["buckets_done"] == 16
-    sa = {
-        (r.url, r.extracted_text, r.error)
-        for r in spark.read.parquet(os.path.join(out, "extracted")).collect()
-    }
-    sb = {
-        (r.url, r.extracted_text, r.error)
-        for r in spark.read.parquet(os.path.join(out_ref, "extracted")).collect()
-    }
-    assert sa == sb
-    for bdir in glob.glob(os.path.join(out, "extracted", "bucket=*")):
-        n_files = len(glob.glob(os.path.join(bdir, "*.parquet")))
-        assert n_files == 1, bdir
-
-
 def test_sink_commit_runs_in_one_wave(spark, corpus, tmp_path):
     """With more buckets than cores, no stage of the job runs more than
     defaultParallelism tasks: the write hashes the buckets into one wave
@@ -249,84 +228,3 @@ def test_lang_filter_pushed_to_scan(spark, corpus):
     plan = extract_job.extract_df(docs, buckets=4)._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters" in plan
     assert "EqualTo(lang,en)" in plan.replace(" ", "")
-
-
-def test_salt_width_rule():
-    """The salted-exchange width resolver: max of the sink bucket count,
-    5x cluster parallelism (the r04 profile's finer-reduce-task win),
-    and the payload-bytes/256MB task-size floor; absurd/unknown byte
-    estimates (stats not computed -> Long.Max sentinel) are ignored."""
-    # parallelism floor reproduces the measured best at both bench levels
-    assert extract_job.salt_width(64, 8) == 64        # 5*8=40 < 64: neutral at N
-    assert extract_job.salt_width(64, 32) == 160      # the measured 32-core win
-    assert extract_job.salt_width(160, 32) == 160     # explicit buckets keep priority
-    # byte floor: 100 TB / 256 MB ~ 409600 reduce tasks, not 5*parallelism
-    assert extract_job.salt_width(64, 8000, est_input_bytes=100 * 2**40) == 409600
-    # unknown / absurd stats sentinel is ignored, parallelism floor stands
-    assert extract_job.salt_width(64, 32, est_input_bytes=None) == 160
-    assert extract_job.salt_width(64, 32, est_input_bytes=0) == 160
-    assert extract_job.salt_width(64, 32, est_input_bytes=1 << 62) == 160
-
-
-def test_salted_exchange_width_decoupled_from_sink_buckets(spark, corpus, tmp_path):
-    """salt_partitions widens the Python-stage exchange without touching
-    the sink bucket identity (resume manifests stay valid), and the
-    output row set is unchanged (partitioning invariance)."""
-    docs = spark.read.parquet(corpus)
-    df = extract_job.extract_df(docs, buckets=4, mode="salted", salt_partitions=24)
-    # exchange width = salt keys + large-page key range
-    assert df.rdd.getNumPartitions() == 24 + max(24 // 4, 8)
-    # sink bucket column still spans the SINK bucket count, not the salt
-    assert df.select("bucket").distinct().count() <= 4
-    ref = {
-        (r.url, r.extracted_text, r.error)
-        for r in extract_job.extract_df(docs, buckets=4, mode="scan-aligned").collect()
-    }
-    got = {(r.url, r.extracted_text, r.error) for r in df.collect()}
-    assert got == ref
-
-
-def test_salted_widened_resume_manifest_identity(spark, corpus, tmp_path):
-    """The decoupling's point at scale: a salted run with a WIDENED
-    exchange (salt_partitions > buckets) must keep the sink/manifest
-    identity — per-bucket manifest rows (counts + content checksum)
-    byte-identical to a scan-aligned run's, one clean file per bucket,
-    and a crash/resume under the widened exchange reproduces the exact
-    row set (VERDICT r04 item 4 Done criterion)."""
-    ref = str(tmp_path / "ref")
-    out = str(tmp_path / "out")
-    extract_job.run(spark, corpus, ref, buckets=8, fresh=True)
-    extract_job.run(spark, corpus, out, buckets=8, fresh=True, mode="salted", salt_partitions=24)
-
-    def manifest_rows(path):
-        return {
-            tuple(r)
-            for r in spark.read.parquet(os.path.join(path, "_manifests"))
-            .select("bucket", "n_rows", "n_ok", "n_failed", "n_text_bytes", "content_checksum")
-            .collect()
-        }
-
-    assert manifest_rows(out) == manifest_rows(ref)
-    for bdir in glob.glob(os.path.join(out, "extracted", "bucket=*")):
-        assert len(glob.glob(os.path.join(bdir, "*.parquet"))) == 1, bdir
-
-    full = {
-        (r.url, r.extracted_text, r.error)
-        for r in spark.read.parquet(os.path.join(out, "extracted")).collect()
-    }
-    # crash: lose buckets 0,1 (data + manifest)
-    for b in (0, 1):
-        shutil.rmtree(os.path.join(out, "extracted", f"bucket={b}"))
-    m = spark.read.parquet(os.path.join(out, "_manifests"))
-    kept = m.filter(~F.col("bucket").isin([0, 1])).collect()
-    shutil.rmtree(os.path.join(out, "_manifests"))
-    spark.createDataFrame(kept, m.schema).write.parquet(os.path.join(out, "_manifests"))
-
-    stats = extract_job.run(spark, corpus, out, buckets=8, mode="salted", salt_partitions=24)
-    assert stats["resumed_buckets_skipped"] == 6
-    after = {
-        (r.url, r.extracted_text, r.error)
-        for r in spark.read.parquet(os.path.join(out, "extracted")).collect()
-    }
-    assert after == full
-    assert manifest_rows(out) == manifest_rows(ref)

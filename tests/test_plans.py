@@ -14,13 +14,13 @@ from .conftest import CACHE, SF_SMOKE
 
 
 def test_extraction_plan_single_exchange_and_pushdown(spark):
-    """One shuffle (the salt repartition) and the lang filter at the
-    scan — re-reading or double-shuffling the html payload is the
-    100 TB killer."""
+    """The extraction plan runs on the scan splits with no shuffle and
+    the lang filter at the scan — re-reading or shuffling the html
+    payload is the 100 TB killer."""
     corpus = ensure_corpus(CACHE, 0.001)
-    plan = extract_df(spark.read.parquet(corpus), buckets=16, mode="salted")
+    plan = extract_df(spark.read.parquet(corpus), buckets=16)
     c = plan_checks(plan)
-    assert c["n_exchanges"] == 1, c
+    assert c["n_exchanges"] == 0, c
     assert any("lang" in pf for pf in c["pushed_filters"]), c
 
 
@@ -73,16 +73,17 @@ def test_no_python_udfs_in_registered_queries(spark):
 
 
 def test_scan_aligned_mode_no_exchange_and_identical_bytes(spark):
-    """scan-aligned extraction must add NO shuffle, and its output must
-    be byte-identical to salted mode (kernel is partitioning-invariant)."""
+    """Extraction on the scan splits must add NO shuffle, and its output
+    must be byte-identical to extraction over a url-hash repartition of
+    the input (the kernel is partitioning-invariant)."""
     corpus = ensure_corpus(CACHE, 0.001)
     docs = spark.read.parquet(corpus)
-    aligned = extract_df(docs, buckets=16, mode="scan-aligned")
+    aligned = extract_df(docs, buckets=16)
     assert plan_checks(aligned)["n_exchanges"] == 0
-    salted = extract_df(docs, buckets=16, mode="salted")
+    shuffled = extract_df(docs.repartition(7, "url"), buckets=16)
     cols = ["url", "extracted_text", "error", "bucket"]
     a = {tuple(r) for r in aligned.select(cols).collect()}
-    b = {tuple(r) for r in salted.select(cols).collect()}
+    b = {tuple(r) for r in shuffled.select(cols).collect()}
     assert a == b
 
 

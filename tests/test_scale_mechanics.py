@@ -1,33 +1,12 @@
-"""Scale-mechanics tests: salting correctness + bucketed shuffle-free joins."""
+"""Scale-mechanics tests: two tables bucketed on the same key join with
+no shuffle, and the same join without bucketing shuffles."""
 
 import os
 
-from pyspark.sql import functions as F
-
-from oct_report_ocr_spark.operators.skew import salted_join
 from oct_report_ocr_spark.plans.report import plan_checks
 from oct_report_ocr_spark.sources.io import write_bucketed_table
 
 from .conftest import SF_SMOKE
-
-
-def test_salted_join_equals_plain_join(spark):
-    """Salting must not change the result set — only the partitioning."""
-    li = spark.read.parquet(os.path.join(SF_SMOKE, "lineitem.parquet"))
-    # make the key skewed: collapse most keys onto one hot key
-    fact = li.withColumn(
-        "hotkey", F.when(F.col("l_orderkey") % 7 != 0, F.lit(1)).otherwise(F.col("l_orderkey"))
-    ).select("hotkey", "l_quantity", "l_extendedprice", "l_linenumber")
-    dim = (
-        fact.select("hotkey").distinct().withColumn("dim_val", F.col("hotkey") * 2)
-    )
-    plain = fact.join(dim, ["hotkey"], "inner")
-    salted = salted_join(fact, dim, "hotkey", n_salts=8)
-    a = sorted(tuple(r) for r in plain.select(sorted(plain.columns)).collect())
-    b = sorted(tuple(r) for r in salted.select(sorted(salted.columns)).collect())
-    assert a == b
-    # the join key must actually include the salt (skew scattered)
-    p = salted._jdf.queryExecution().executedPlan().toString()
 
 
 def test_bucketed_join_no_shuffle(spark):
