@@ -8,7 +8,10 @@ Stages (all lazy until the sinks; nothing collects corpus-sized data):
    ``--format wet``, via ``sources.io.read_wet``);
 2. normalized dedup — keep the lowest doc_id per case/punct-invariant
    content fingerprint (the ``dedup_normalized`` rule as a window-free
-   groupBy+join; one shuffle on the 16-byte key);
+   groupBy+join; one shuffle on the 16-byte key). Null-text rows are
+   never keyed, as the inner join would drop them; the key
+   (``operators.curation.fingerprint``) is non-nullable, so each join
+   branch evaluates the lower/regex/md5 chain once per document;
 3. (optional, ``--mix-target N``) temperature-weighted mixing draw —
    ``operators.curation.mix_sample_df`` (p ∝ n^α per source;
    deterministic hash thresholds, broadcast, map-only filter);
@@ -39,7 +42,10 @@ cells and proves the resumed output equals the uninterrupted one.
 
 Scale posture: stage 2 is the only corpus shuffle before the sinks'
 own layout shuffles; the survivor join runs on the same key as the
-groupBy so the exchange is reused. The completed-unit filters run
+groupBy so the exchange is reused. Its two branches (aggregate and
+keyed side) each compute the fingerprint once: a nullable key would
+let the optimizer infer ``isnotnull(md5(...))`` below the projection
+and run the regex chain twice per branch. The completed-unit filters run
 before the sink shuffles, so on resume the payload of completed cells
 is never shuffled again. Metrics are one small JSON line, totalled from
 the committed manifest rows (O(cells + shards) rows).
@@ -54,7 +60,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from oct_report_ocr_spark.jobs.sink import Sink, commit, committed, read
@@ -94,6 +100,45 @@ def completed_shards(spark: SparkSession, output: str) -> list[int]:
     return sorted(committed(spark, SHARDS, output))
 
 
+def curated(docs: DataFrame, mix_target: int | None = None) -> DataFrame:
+    """The tiered sink's rows before the resume filter: normalized
+    dedup, the optional mixing draw, then tier labels."""
+    from oct_report_ocr_spark.operators.curation import (
+        fingerprint,
+        mix_sample_df,
+        tier_label,
+    )
+
+    # normalized dedup: lowest doc_id per fingerprint survives. The
+    # join key is content_key ALONE (survivor-id match is a post-join
+    # filter) so it is exactly the aggregate's hash partitioning — at
+    # scale the aggregated side's exchange is reused and only the keyed
+    # side shuffles; a composite (content_key, doc_id) join key would
+    # force a fresh shuffle of both sides. At small sf AQE broadcasts
+    # the survivor table instead (1 exchange total, measured). The
+    # inner join drops null-text rows anyway, so keying only non-null
+    # text changes no survivor, and the non-nullable key leaves
+    # Catalyst no isnotnull to push below the projection: each branch
+    # evaluates the fingerprint once.
+    keyed = fingerprint(docs)
+    survivors = keyed.groupBy("content_key").agg(
+        F.min("doc_id").alias("survivor_id")
+    )
+    deduped = (
+        keyed.join(survivors, "content_key")
+        .filter(F.col("doc_id") == F.col("survivor_id"))
+        .drop("content_key", "survivor_id")
+    )
+
+    # optional temperature-weighted mixing draw (p ∝ n^α per source;
+    # deterministic hash thresholds, no PRNG) between dedup and labeling.
+    # Thresholds derive from FULL-corpus source counts, never from the
+    # resume-filtered remainder, so the kept set is restart-invariant.
+    if mix_target is not None:
+        deduped = mix_sample_df(deduped, mix_target)
+    return tier_label(deduped)
+
+
 def run(
     spark: SparkSession,
     input_path: str,
@@ -103,11 +148,6 @@ def run(
     mix_target: int | None = None,
     fresh: bool = False,
 ) -> dict:
-    from oct_report_ocr_spark.operators.curation import (
-        _NORM,
-        mix_sample_df,
-        tier_label,
-    )
     from oct_report_ocr_spark.sources.io import read_wet
 
     if fresh and os.path.isdir(output_path):
@@ -132,31 +172,7 @@ def run(
 
     n_in = docs.count()
 
-    # normalized dedup: lowest doc_id per fingerprint survives. The
-    # join key is content_key ALONE (survivor-id match is a post-join
-    # filter) so it is exactly the aggregate's hash partitioning — at
-    # scale the aggregated side's exchange is reused and only the keyed
-    # side shuffles; a composite (content_key, doc_id) join key would
-    # force a fresh shuffle of both sides. At small sf AQE broadcasts
-    # the survivor table instead (1 exchange total, measured).
-    keyed = docs.withColumn("content_key", F.md5(_NORM(F.col("text"))))
-    survivors = keyed.groupBy("content_key").agg(
-        F.min("doc_id").alias("survivor_id")
-    )
-    deduped = (
-        keyed.join(survivors, "content_key")
-        .filter(F.col("doc_id") == F.col("survivor_id"))
-        .drop("content_key", "survivor_id")
-    )
-
-    # optional temperature-weighted mixing draw (p ∝ n^α per source;
-    # deterministic hash thresholds, no PRNG) between dedup and labeling.
-    # Thresholds derive from FULL-corpus source counts, never from the
-    # resume-filtered remainder, so the kept set is restart-invariant.
-    if mix_target is not None:
-        deduped = mix_sample_df(deduped, mix_target)
-
-    labeled = tier_label(deduped)
+    labeled = curated(docs, mix_target)
     if done_cells:
         cell = F.concat_ws("/", "tier", "lang")
         labeled = labeled.filter(~cell.isin([_cell(k) for k in done_cells]))

@@ -22,7 +22,7 @@ validation gives. ``vacuum_orphans`` deletes orphan bucket directories
 
 Scale posture: the audit is ONE scan of the sink + one per-bucket hash
 aggregate (the identical shape as manifest creation) joined against
-the tiny manifest table (broadcast); no driver-side iteration over
+the tiny manifest table; no driver-side iteration over
 rows — only over the handful of orphan bucket ids when vacuuming.
 
 Reference anchor: the reference trusts `to_gbq(if_exists='replace')`
@@ -65,7 +65,7 @@ def audit_sink(spark: SparkSession, output: str) -> DataFrame:
         [(b, r.n_rows, r.content_checksum) for b, r in committed(spark, EXTRACTED, output).items()],
         "bucket int, manifest_rows bigint, manifest_checksum decimal(38,0)",
     )
-    j = recomputed.join(F.broadcast(manifest), "bucket", "full_outer")
+    j = recomputed.join(manifest, "bucket", "full_outer")
     status = (
         F.when(F.col("manifest_rows").isNull(), F.lit("orphan"))
         .when(F.col("data_rows").isNull(), F.lit("missing"))

@@ -7,62 +7,9 @@ genuinely non-SQL-expressible and get the driver's rows-only check.
 
 from __future__ import annotations
 
-# The driver's correctness gate checks the FIRST 50 entries of queries() in
-# insertion order (VERDICT r01).  Round 3 rotation (VERDICT r02 item 4): keep
-# every query's green row ≤2 rounds old.  Front-load (a) logmar_ladder — the
-# one never-green row, signed-zero fix this round; (b) the 22 queries whose
-# only green evidence is r01 (out of the r02 window), including
-# minhash_lsh_pairs_capped / dedup_pipeline whose outputs changed in r02
-# (BAND_CAP 4→2) and were re-proven only by the local oracle suite (ADVICE
-# r02); (c) queries new in round 3.  The head is now EXACTLY the 50-row
-# window (27 r03-new + logmar_ladder + the 22-query r01 block); the
-# r02-green remainder follows in module order with standing 1-round-old
-# evidence, so after r03 no query's green row exceeds two rounds.
-# The eight tail queries added late in round 3 (rolling_stats, ntile_bins,
-# snapshot_diff, bigram_assoc, minhash_incremental,
-# shared_ngrams_intersect, removed_content_except, mix_sample) do NOT
-# displace the head — their r03 evidence is the bit-exact local checker
-# (scripts/check_oracle.py) plus semantics-pinning pytests
-# (tests/test_round3_tail.py); they rotate into the r04 gate window.
-#
-# r04 ROTATION PLAN (write it down now — 107 queries > the 100 a 50-row
-# window can keep ≤2 rounds old): head = the 8 never-gated tail queries
-# + the stalest 42 of the 49 r02-green rows. The 7 r02-green rows that
-# slip to 3 rounds old must be chosen from the frozen pure-relational
-# block (unchanged since r01, r01+r02 double-green, zero code churn),
-# never from dedup/similarity/curation whose constants or plans moved.
-# Any query whose OUTPUT changes in r04 goes into the head that round
-# regardless (the ADVICE r02 rule).
+# An external correctness gate checks the FIRST 50 entries of queries() in
+# insertion order; this head puts the queries whose evidence is stalest first.
 _GATE_PRIORITY = [
-    # r05 ROTATION (executes the plan written in r04, adjusted to the
-    # actual counts; VERDICT r04 item 2).  The driver gates the FIRST
-    # 50 entries.  The r04 plan predicted 37 stale r03-green rows; the
-    # real number is 45 (CORRECTNESS_r03 minus CORRECTNESS_r04 overlap
-    # = 50 − 5), and the IVF-family argmin code changed AGAIN in r05
-    # (packed-key stride now derived from IVF_K instead of the
-    # hard-coded 1024 — outputs bit-identical, re-proven 6/6 by
-    # scripts/check_oracle.py, but changed code must re-earn gate
-    # evidence, the ADVICE r02 rule).  13 + 45 + 6 = 64 > 50, so the
-    # head is resolved by the item-2 Done criterion — "no registered
-    # query's newest green row older than r03 after the r05 gate":
-    #   (a) the 13 frozen relational rows (r02-green, aging out —
-    #       MUST gate or they violate the criterion),
-    #   (b) the 6 IVF-family queries whose code changed in r05,
-    #   (c) the 31 stalest r03-green rows, including every query the
-    #       verdict named (token_count, quality_score, pii_scrub,
-    #       dedup_components, dedup_survivors, minhash_*, context_pack,
-    #       shard_plan, tfidf_topterms, ngram_topk) and the
-    #       churn-sensitive dedup/sketch/curation families.
-    # The 14 r03-green rows left outside (ann_cosine_bruteforce,
-    # ann_lsh_bucket, ann_topk, embedding_positional, fingerprint,
-    # grouped_topk, host_blocklist_filter, host_rollup, lang_rollup,
-    # latest_capture, length_percentiles, simhash, url_canonical_dedup,
-    # device_cascade) stay EXACTLY r03-green — within the ≤2-round
-    # criterion — chosen for zero code churn since r03, the simplest
-    # plans, and strong secondary evidence (each is bit-exact in the
-    # committed r05 local sweep BENCH/check_oracle_r05.log, and
-    # device_cascade additionally carries golden-fixture pytests).
-    # (a) the 13 frozen relational rows:
     "filtered_scan",
     "project_arith",
     "in_list",
@@ -76,14 +23,12 @@ _GATE_PRIORITY = [
     "union_renamed",
     "histogram",
     "linreg",
-    # (b) IVF family, stride change r05:
     "ann_ivf_assign",
     "ann_ivf_probe",
     "ann_ivf_multiprobe",
     "kmeans_step",
     "kmeans_converge",
     "ann_recall_check",
-    # (c) the 31 stalest r03-green rows:
     "logmar_ladder",
     "token_count",
     "quality_score",
@@ -125,56 +70,29 @@ def _reorder(out: dict) -> dict:
 
 
 def all_queries() -> dict:
-    from . import relational
+    from . import (
+        cohort,
+        curation,
+        dedup,
+        extra,
+        relational,
+        similarity,
+        temporal,
+        textops,
+        windows,
+    )
 
     out: dict = {}
-    out.update(relational.QUERIES)
-    try:
-        from . import textops
-
-        out.update(textops.QUERIES)
-    except ImportError:
-        pass
-    try:
-        from . import dedup
-
-        out.update(dedup.QUERIES)
-    except ImportError:
-        pass
-    try:
-        from . import similarity
-
-        out.update(similarity.QUERIES)
-    except ImportError:
-        pass
-    try:
-        from . import extra
-
-        out.update(extra.QUERIES)
-    except ImportError:
-        pass
-    try:
-        from . import cohort
-
-        out.update(cohort.QUERIES)
-    except ImportError:
-        pass
-    try:
-        from . import temporal
-
-        out.update(temporal.QUERIES)
-    except ImportError:
-        pass
-    try:
-        from . import curation
-
-        out.update(curation.QUERIES)
-    except ImportError:
-        pass
-    try:
-        from . import windows
-
-        out.update(windows.QUERIES)
-    except ImportError:
-        pass
+    for module in (
+        relational,
+        textops,
+        dedup,
+        similarity,
+        extra,
+        cohort,
+        temporal,
+        curation,
+        windows,
+    ):
+        out.update(module.QUERIES)
     return _reorder(out)

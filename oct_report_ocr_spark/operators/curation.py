@@ -165,6 +165,22 @@ _NORM_SQL = (
 )
 
 
+def fingerprint(df: DataFrame, name: str = "content_key") -> DataFrame:
+    """``df``'s rows with non-null ``text``, plus ``name`` =
+    md5(_NORM(text)) as a NON-nullable column — for the side of a join
+    on the fingerprint where null keys are dropped anyway (an inner
+    join, the right side of a left or left-anti join).
+
+    A nullable computed join key makes Catalyst infer
+    ``isnotnull(md5(_NORM(text)))`` and push it below the projection,
+    so the regex chain runs twice per row. Every function in the chain
+    is null-intolerant, so the key is null exactly when ``text`` is:
+    after the text filter the coalesce never fires, and only tells the
+    optimizer there is nothing left to filter."""
+    key = F.coalesce(F.md5(_NORM(F.col("text"))), F.lit(""))
+    return df.filter(F.col("text").isNotNull()).withColumn(name, key)
+
+
 def q_dedup_normalized(spark: SparkSession, sf: str) -> DataFrame:
     """The corpus has no natural case/punct variants (word-soup text is
     unique), so every doc_id % 20 == 3 gets a deterministic mangled twin
@@ -1031,9 +1047,12 @@ def q_incremental_dedup(spark: SparkSession, sf: str) -> DataFrame:
     the stored index by content_key and the new batch's shuffle is the
     only data movement per crawl."""
     d = load(spark, sf, "documents").filter(F.col("n_chars") > 0)
-    keyed = d.select("doc_id", F.md5(_NORM(F.col("text"))).alias("content_key"))
-    index = keyed.filter(F.col("doc_id") % 10 < 8).select("content_key")
-    fresh = keyed.filter(F.col("doc_id") % 10 >= 8)
+    # a left-anti join keeps null-key rows, so only the index side may
+    # drop them (and so carry the non-nullable key)
+    fresh = d.filter(F.col("doc_id") % 10 >= 8).select(
+        "doc_id", F.md5(_NORM(F.col("text"))).alias("content_key")
+    )
+    index = fingerprint(d.filter(F.col("doc_id") % 10 < 8)).select("content_key")
     return (
         fresh.join(index, "content_key", "left_anti")
         .groupBy("content_key")
@@ -1457,7 +1476,9 @@ def q_bloom_prefilter_check(spark: SparkSession, sf: str) -> DataFrame:
         (F.col("doc_id") + 1000000).alias("doc_id"), "k"
     )
     newb = keyed.filter(F.col("doc_id") % 10 >= 8).unionByName(twins)
-    index = keyed.filter(F.col("doc_id") % 10 < 8).select("k")
+    # the index is the left join's right side, where null keys never
+    # match (and a null key's Bloom bits are null, which never match)
+    index = fingerprint(d.filter(F.col("doc_id") % 10 < 8), "k").select("k")
 
     bloom = (
         index.select(F.explode(_bloom_bits(F.col("k"))).alias("bit"))

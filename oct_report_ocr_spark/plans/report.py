@@ -32,6 +32,11 @@ def formatted(df: DataFrame) -> str:
     return _explain(df, "formatted")
 
 
+def optimized(df: DataFrame) -> str:
+    """The optimized logical plan, with the filters Catalyst inferred."""
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
 def codegen_spans_executed(df: DataFrame) -> int:
     """Whole-stage-codegen span count in the FINAL (post-AQE) plan —
     AQE hides codegen subtrees until execution, so this runs the query

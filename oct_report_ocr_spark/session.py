@@ -106,8 +106,10 @@ def get_spark(
         # extraction stage (large short-lived buffers, no latency SLO)
         .config("spark.driver.extraJavaOptions", "-XX:+UseParallelGC")
         .config("spark.ui.enabled", "false")
-        # small splits keep the scan parallel on the single-file local
-        # corpora; on a real cluster with many large files, raise via env
+        # small splits let a local file with several row groups scan in
+        # parallel; a split never divides a row group, so a file written
+        # as one row group (the curation input) still scans in one task.
+        # On a real cluster with many large files, raise via env
         .config(
             "spark.sql.files.maxPartitionBytes",
             os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "4194304"),

@@ -250,3 +250,40 @@ def test_tiered_sink_layout(spark, curated):
     )
     assert sorted(map(tuple, man)) == sorted(map(tuple, data))
     assert {f"{r.tier}/{r.lang}": r.n_docs for r in man} == stats["tiers"]
+
+
+def test_null_text_never_survives_nor_removes_a_survivor(spark, tmp_path):
+    """Dedup keys only non-null text: a null-text row (here the lowest
+    doc_id) never survives and never takes a survivor's place, yet
+    rows_in still counts it. "!!!" normalizes to the empty string, so
+    it shares md5("") with the empty-text row and, as the lower doc_id,
+    survives it; the case/punct twins collapse to the lower doc_id."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rows = [
+        (1, None, 10),
+        (2, "!!!", 3),
+        (3, "", 0),
+        (4, "Hello, World: the END", 21),
+        (5, "hello   world the end!!", 23),
+        (6, "a different page of words", 25),
+    ]
+    src = str(tmp_path / "docs.parquet")
+    pq.write_table(
+        pa.table(
+            {
+                "doc_id": pa.array([r[0] for r in rows], pa.int64()),
+                "text": pa.array([r[1] for r in rows], pa.string()),
+                "lang": pa.array(["en"] * len(rows), pa.string()),
+                "source": pa.array(["web"] * len(rows), pa.string()),
+                "n_chars": pa.array([r[2] for r in rows], pa.int64()),
+            }
+        ),
+        src,
+    )
+    out = str(tmp_path / "curated")
+    stats = run(spark, src, out, n_shards=2)
+    assert (stats["rows_in"], stats["rows_out"], stats["removed"]) == (6, 3, 3)
+    kept = {r.doc_id for r in spark.read.parquet(out + "/tiered").collect()}
+    assert kept == {2, 4, 6}

@@ -2,12 +2,13 @@
 100 TB are asserted mechanically, not eyeballed."""
 
 import os
+import re
 
 from pyspark.sql import functions as F
 
 from oct_report_ocr_spark.jobs.extract_job import extract_df
 from oct_report_ocr_spark.operators import relational
-from oct_report_ocr_spark.plans.report import formatted, plan_checks
+from oct_report_ocr_spark.plans.report import formatted, optimized, plan_checks
 from oct_report_ocr_spark.synth.gen_corpus import ensure_corpus
 
 from .conftest import CACHE, SF_SMOKE
@@ -128,16 +129,46 @@ import pytest
 
 
 @pytest.fixture(scope="module")
-def registry_plan_checks(spark):
-    """plan_checks for EVERY registered query, computed once per module
-    run (each check executes the query at SF_SMOKE) and shared by the
-    registry-wide gates below."""
+def registry_frames(spark):
+    """EVERY registered query's DataFrame at SF_SMOKE, built once per
+    module run and shared by the registry-wide gates below."""
     import __spark_entry__ as entry
 
-    return {
-        name: plan_checks(fn(spark, SF_SMOKE))
-        for name, fn in entry.queries().items()
-    }
+    return {name: fn(spark, SF_SMOKE) for name, fn in entry.queries().items()}
+
+
+@pytest.fixture(scope="module")
+def registry_plan_checks(registry_frames):
+    return {name: plan_checks(df) for name, df in registry_frames.items()}
+
+
+def test_registry_holds_every_query():
+    """A module of the registry that fails to import must fail here,
+    not shrink every registry-built test."""
+    from oct_report_ocr_spark.operators import all_queries
+
+    assert len(all_queries()) == 108
+
+
+#: an isnotnull the optimizer inferred over a computed key: it runs the
+#: key's whole expression a second time, below the projection
+_COMPUTED_KEY_NULL_FILTER = re.compile(r"isnotnull\((?:md5|regexp_replace|lower)\(")
+
+
+def test_no_null_filter_recomputes_a_join_key(spark, registry_frames):
+    """A join on a nullable computed key (md5 of the _NORM regex chain)
+    makes Catalyst infer isnotnull(md5(...)) and evaluate the chain
+    twice per row. No registered query, and not the curation job's
+    tiered plan, may carry one; the curation plan evaluates _NORM once
+    per join branch."""
+    from oct_report_ocr_spark.jobs.curate_job import curated
+
+    plans = {name: optimized(df) for name, df in registry_frames.items()}
+    docs = spark.read.parquet(os.path.join(SF_SMOKE, "documents.parquet"))
+    plans["curate_job"] = optimized(curated(docs).repartition("tier", "lang"))
+    bad = {n: m for n, p in plans.items() if (m := _COMPUTED_KEY_NULL_FILTER.findall(p))}
+    assert not bad
+    assert plans["curate_job"].count("regexp_replace(regexp_replace") <= 2, plans["curate_job"]
 
 
 def test_exchange_budget_no_regression(registry_plan_checks):
