@@ -1,5 +1,5 @@
-"""Sink maintenance: fsck-style audit + orphan vacuum for the
-parquet + `_manifests` snapshot sink (jobs/extract_job.py).
+"""Sink maintenance: fsck-style audit of the parquet + `_manifests`
+snapshot sink (jobs/extract_job.py).
 
 The sink's commit protocol (``jobs/sink.py``) is data-first,
 manifest-second (per bucket).
@@ -17,13 +17,13 @@ README probe), the failure windows are:
 ``audit_sink`` recomputes every bucket's manifest row from the data
 actually on disk and full-outer-joins it against the committed
 manifest — the same integrity check a table format's snapshot
-validation gives. ``vacuum_orphans`` deletes orphan bucket directories
-(dry-run by default; destructive only with ``apply=True``).
+validation gives. There is no separate vacuum: re-running the job
+removes the orphans (``sink.commit``), so the audit's ``orphan`` rows
+are the dry run of that removal.
 
 Scale posture: the audit is ONE scan of the sink + one per-bucket hash
 aggregate (the identical shape as manifest creation) joined against
-the tiny manifest table; no driver-side iteration over
-rows — only over the handful of orphan bucket ids when vacuuming.
+the tiny manifest table; no driver-side iteration over rows.
 
 Reference anchor: the reference trusts `to_gbq(if_exists='replace')`
 for table integrity (utils.py:633); this module provides the
@@ -32,18 +32,10 @@ equivalent auditability for the manifest-based stand-in.
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from oct_report_ocr_spark.jobs.extract_job import (
-    DATA_DIR,
-    EXTRACTED,
-    _manifest_rows,
-    read_sink,
-)
+from oct_report_ocr_spark.jobs.extract_job import EXTRACTED, _manifest_rows, read_sink
 from oct_report_ocr_spark.jobs.sink import committed
 
 
@@ -82,29 +74,3 @@ def audit_sink(spark: SparkSession, output: str) -> DataFrame:
         "data_rows",
         "manifest_rows",
     )
-
-
-def vacuum_orphans(
-    spark: SparkSession, output: str, apply: bool = False
-) -> list[int]:
-    """Delete (or with ``apply=False``, just report) bucket directories
-    present in the sink's data but absent from the manifest. Returns
-    the orphan bucket ids. Only the orphan id list — never row data —
-    reaches the driver."""
-    # deletion below is driver-local (os/shutil); on a remote sink URI
-    # it would silently delete nothing while still returning the orphan
-    # list as if vacuumed (ADVICE r03) — refuse loudly, and before the
-    # audit so the caller sees THIS error, not a filesystem one
-    if apply and "://" in output and not output.startswith("file:"):
-        raise NotImplementedError(
-            f"vacuum_orphans apply=True only supports local paths; got "
-            f"{output!r} — use the Hadoop FileSystem API for remote sinks"
-        )
-    report = audit_sink(spark, output)
-    orphans = [
-        r.bucket for r in report.filter(F.col("status") == "orphan").collect()
-    ]
-    if apply:
-        for b in orphans:
-            shutil.rmtree(os.path.join(output, DATA_DIR, f"bucket={b}"))
-    return sorted(orphans)

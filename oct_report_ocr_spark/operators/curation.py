@@ -431,33 +431,23 @@ def _has_stopword(toks):
     return F.arrays_overlap(toks, F.array(*[F.lit(s) for s in _STOPWORDS]))
 
 
-def _tier_of(toks):
-    """The tier rule as a pure column expression over a token array —
-    THE single definition shared by ``tier_label`` (and through it
-    ``tier_extract`` / ``quality_tiers``) and the streaming crawl
-    monitor, so batch, oracle, and stream labeling cannot drift."""
-    n_words = F.size(toks)
-    return (
-        F.when((n_words >= 60) & _has_stopword(toks), F.lit("high"))
-        .when(n_words >= 30, F.lit("mid"))
-        .otherwise(F.lit("low"))
-    )
-
-
 def tier_label(docs: DataFrame) -> DataFrame:
-    """Apply the tier rule to ANY documents frame (batch or streaming —
-    the expressions are stateless map-only, so the identical labeling
-    runs unchanged over readStream micro-batches; pytest proves
+    """Apply the tier rule to ANY documents frame (batch or
+    ``readStream`` — the expressions are stateless map-only, so the
+    identical labeling runs unchanged over micro-batches; pytest proves
     batch/stream label equality). The single source of the tier rule
-    for ``tier_extract``, ``quality_tiers``, and the streaming path, so
-    none can drift."""
+    for ``tier_extract`` and ``quality_tiers``, so they cannot drift."""
     d = docs.filter(F.col("n_chars") > 0)
     d = d.select("doc_id", "lang", _toks().alias("toks"))
     toks = F.col("toks")
     n_words = F.size(toks)
     sum_len = F.aggregate(toks, F.lit(0), lambda acc, x: acc + F.length(x))
     has_stop = _has_stopword(toks)
-    tier = _tier_of(toks)
+    tier = (
+        F.when((n_words >= 60) & has_stop, F.lit("high"))
+        .when(n_words >= 30, F.lit("mid"))
+        .otherwise(F.lit("low"))
+    )
     return d.select(
         "doc_id",
         "lang",
@@ -1024,8 +1014,7 @@ SELECT doc_id, rank, term, tf, df, score FROM ranked WHERE rank <= {TFIDF_TOP_K}
 # --------------------------------------------------------------------------
 # Incremental (cross-snapshot) dedup: the infinite-crawl shape — each
 # new crawl batch dedups against the ACCUMULATED fingerprint index of
-# everything already kept, not against itself alone. The batch-mode
-# companion to streaming/stream_extract.dedup_stream.
+# everything already kept, not against itself alone.
 # --------------------------------------------------------------------------
 
 

@@ -11,13 +11,11 @@ Decode kernels, all zero-external-dep (stdlib + numpy) and REAL:
 BMP (24bpp BI_RGB), binary PPM (P6), PNG (every valid IHDR shape:
 gray/RGB/palette/gray+alpha/RGBA, bit depths 1/2/4/8/16,
 non-interlaced and Adam7, full filter reconstruction incl. Paeth),
-GIF (87a/89a LZW incl. interlace, transparency and multi-frame
-animation — sources/gif.py, feeding both decode_image and the
-frame-sample path), WAV (RIFF PCM 8/16/24/32-bit, IEEE float
+WAV (RIFF PCM 8/16/24/32-bit, IEEE float
 32/64-bit, G.711 a-law/μ-law, IMA ADPCM and MS ADPCM, plain or
 WAVE_FORMAT_EXTENSIBLE, real chunk walk) and the minimal FV01 video
-container. Every other format (JPEG, WebP, MP3/AAC/Opus, real video
-codecs) raises ``DecodeUnavailable``: featurize falls back to a
+container. Every other format (JPEG, GIF, WebP, MP3/AAC/Opus, real
+video codecs) raises ``DecodeUnavailable``: featurize falls back to a
 deterministic digest fake, the other stages quarantine the row. A
 recognized magic in a row of the wrong kind (a WAV in an image row, a
 PNG, GIF or JPEG in an audio row) quarantines as
@@ -322,27 +320,12 @@ def _decode_png(b: bytes) -> tuple[int, int, float, float, float]:
     return w, h, float(means[0]), float(means[1]), float(means[2])
 
 
-def _decode_gif_means(b: bytes) -> tuple[int, int, float, float, float]:
-    """First composited GIF frame → (w, h, mean RGB); GifError maps to
-    the shared quarantine class."""
-    from oct_report_ocr_spark.sources import gif as _gif
-
-    try:
-        arr = _gif.decode_gif(b)
-    except _gif.GifError as e:
-        raise CorruptImage(str(e)) from e
-    h, w = arr.shape[0], arr.shape[1]
-    means = arr.reshape(-1, 3).mean(axis=0) / 255.0
-    return w, h, float(means[0]), float(means[1]), float(means[2])
-
-
 def decode_image(content: bytes) -> tuple[int, int, float, float, float]:
     """Real image decode: zero-external-dep kernels for uncompressed BMP
-    (24bpp BI_RGB), binary PPM (P6), PNG (every valid IHDR shape) and
-    GIF (87a/89a LZW incl. interlace and transparency; sources/gif.py)
+    (24bpp BI_RGB), binary PPM (P6) and PNG (every valid IHDR shape)
     → (width, height, mean_r, mean_g, mean_b). Every other format
-    (JPEG, WebP, ...) raises DecodeUnavailable; malformed
-    BMP/PPM/PNG/GIF raise CorruptImage. The Spark-side stages choose what
+    (JPEG, GIF, WebP, ...) raises DecodeUnavailable; malformed
+    BMP/PPM/PNG raise CorruptImage. The Spark-side stages choose what
     each class means (featurize falls back to the digest fake on
     DecodeUnavailable, resize quarantines both)."""
     if content[:2] == b"BM":
@@ -351,8 +334,6 @@ def decode_image(content: bytes) -> tuple[int, int, float, float, float]:
         return _decode_ppm(content)
     if content[:8] == _PNG_MAGIC:
         return _decode_png(content)
-    if content[:6] in (b"GIF87a", b"GIF89a"):
-        return _decode_gif_means(content)
     if _sniff_kind(content) == "audio":
         # cross-kind confusion (VERDICT r04 item 7): a recognized WAV in
         # an image row is mislabeled data, not a missing codec — it must
@@ -363,9 +344,9 @@ def decode_image(content: bytes) -> tuple[int, int, float, float, float]:
 
 def _sniff_kind(b: bytes) -> str | None:
     """Best-effort media-kind sniff over well-known magics — used only
-    to catch cross-kind mislabeling (a WAV in an image row, a PNG or
-    JPEG in an audio row). JPEG counts as an image even though
-    decode_image does not decode it. Unknown magics return None and
+    to catch cross-kind mislabeling (a WAV in an image row, a PNG, GIF
+    or JPEG in an audio row). JPEG and GIF count as images even though
+    decode_image does not decode them. Unknown magics return None and
     keep the honest DecodeUnavailable path."""
     if (
         b[:2] in (b"BM", b"P6", b"\xff\xd8")
@@ -485,7 +466,7 @@ def featurize(media: DataFrame, partitions: int | None = None) -> DataFrame:
 
 
 def _decode_rgb_array(b: bytes):
-    """Decode BMP (24bpp BI_RGB) / PPM (P6) / PNG / GIF to an (h, w, 3) uint8 RGB
+    """Decode BMP (24bpp BI_RGB) / PPM (P6) / PNG to an (h, w, 3) uint8 RGB
     numpy array — vectorized (frombuffer + strided reshape), no Python
     per-pixel loop. Shares validation with the mean-RGB kernels."""
     import struct
@@ -513,13 +494,6 @@ def _decode_rgb_array(b: bytes):
         if arr.shape[2] <= 2:  # gray / gray+alpha → replicate to RGB
             return np.repeat(arr[:, :, :1], 3, axis=2)
         return arr[:, :, :3]  # RGBA drops alpha; palette already mapped
-    if b[:6] in (b"GIF87a", b"GIF89a"):
-        from oct_report_ocr_spark.sources import gif as _gif
-
-        try:
-            return _gif.decode_gif(b)
-        except _gif.GifError as e:
-            raise CorruptImage(str(e)) from e
     raise DecodeUnavailable("image codec libraries not present in this environment")
 
 
@@ -530,7 +504,7 @@ def _encode_ppm(arr) -> bytes:
 
 
 def resize_image(content: bytes, out_w: int, out_h: int) -> bytes:
-    """Real nearest-neighbor resize: decode (BMP/PPM/PNG/GIF) → integer index
+    """Real nearest-neighbor resize: decode (BMP/PPM/PNG) → integer index
     resample via numpy fancy indexing → re-encode as P6 PPM. Pure
     numpy — O(out pixels), vectorized, deterministic."""
     import numpy as np
@@ -588,23 +562,10 @@ def make_fvid(w: int, h: int, n_frames: int, seed: int = 0) -> bytes:
 
 
 def sample_frames(content: bytes, every_k: int) -> list[tuple[int, int, int, bytes]]:
-    """Parse an FV01 payload or an animated GIF and return every k-th
-    frame (always including frame 0) as (frame_idx, w, h, P6 bytes)."""
+    """Parse an FV01 payload and return every k-th frame (always
+    including frame 0) as (frame_idx, w, h, P6 bytes)."""
     import struct
 
-    if content[:6] in (b"GIF87a", b"GIF89a"):
-        # animated GIF: the one real web video-ish container this
-        # environment can decode end-to-end (sources/gif.py)
-        from oct_report_ocr_spark.sources import gif as _gif
-
-        try:
-            frames, w, h = _gif.decode_gif_frames(content)
-        except _gif.GifError as e:
-            raise CorruptImage(str(e)) from e
-        return [
-            (idx, w, h, f"P6\n{w} {h}\n255\n".encode() + frames[idx].tobytes())
-            for idx in range(0, len(frames), max(every_k, 1))
-        ]
     if content[:4] != FVID_MAGIC:
         raise DecodeUnavailable("video codec libraries not present in this environment")
     if len(content) < 10:
@@ -1315,61 +1276,24 @@ def make_png(
 
 
 # synth_media's rotations, shared with the tests that check its rows
-def make_gif(w: int, h: int, seed: int = 0, interlace: bool = False) -> bytes:
-    """Deterministic single-frame GIF for tests: pixels index a 64-color
-    closed-form palette, so the lossless decode has an exact oracle."""
-    import numpy as np
-
-    from oct_report_ocr_spark.sources.gif import encode_gif
-
-    pal = np.array(
-        [[(13 * k) % 256, (29 * k + 7) % 256, (53 * k + 3) % 256] for k in range(64)],
-        dtype=np.uint8,
-    )
-    idx = np.frombuffer(
-        bytes((seed + i) % 64 for i in range(w * h)), dtype=np.uint8
-    ).reshape(h, w)
-    return encode_gif(pal[idx], interlace=interlace)
-
-
-def make_gif_video(w: int, h: int, n_frames: int, seed: int = 0) -> bytes:
-    """Deterministic animated GIF for tests — the frame-sample analogue
-    of make_fvid, with per-frame distinct palette-index ramps."""
-    import numpy as np
-
-    from oct_report_ocr_spark.sources.gif import encode_gif_frames
-
-    pal = np.array(
-        [[(13 * k) % 256, (29 * k + 7) % 256, (53 * k + 3) % 256] for k in range(64)],
-        dtype=np.uint8,
-    )
-    frames = [
-        pal[np.frombuffer(
-            bytes((seed + f * 17 + i) % 64 for i in range(w * h)), dtype=np.uint8
-        ).reshape(h, w)]
-        for f in range(n_frames)
-    ]
-    return encode_gif_frames(frames)
-
-
-SYNTH_IMAGE_MAKERS = (make_bmp, make_ppm, make_png, make_gif)
+SYNTH_IMAGE_MAKERS = (make_bmp, make_ppm, make_png)
 SYNTH_WAV_FORMATS = (
     (8, "pcm"), (16, "pcm"), (24, "pcm"), (32, "float"),
     (8, "mulaw"), (8, "alaw"), (4, "ima_adpcm"), (4, "ms_adpcm"),
 )
-SYNTH_VIDEO_MAKERS = (make_fvid, make_gif_video)
+SYNTH_VIDEO_MAKERS = (make_fvid,)
 
 
 def synth_media(spark, n: int = 64):
     """Deterministic fake media table for tests (binary payload sizes
     deliberately skewed, one empty payload per 16). Every 5th image row
-    carries a REAL decodable payload (rotating BMP/PPM/PNG/GIF) so the
+    carries a REAL decodable payload (rotating BMP/PPM/PNG) so the
     real decode kernel is exercised in the distributed path; every 13th
     image row is a corrupt BMP (quarantine path). Audio rows mirror the
     scheme with WAV payloads (rotating 8/16/24-bit PCM, 32-bit float,
     G.711 and both ADPCM families / truncated-chunk corrupt / opaque
-    bytes), and video rows with FV01 containers and animated GIFs (real
-    frame-sample paths / corrupt container / opaque bytes)."""
+    bytes), and video rows with FV01 containers (real frame-sample path
+    / corrupt container / opaque bytes)."""
     rows = []
     for i in range(n):
         size = (i * 977) % 4096 + (8192 if i % 11 == 0 else 0)

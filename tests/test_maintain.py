@@ -1,5 +1,5 @@
-"""Sink audit + vacuum (jobs/maintain.py): the fsck for the
-parquet + `_manifests` snapshot sink."""
+"""Sink audit (jobs/maintain.py): the fsck for the parquet +
+`_manifests` snapshot sink."""
 
 import os
 import shutil
@@ -7,11 +7,11 @@ import shutil
 from tests.conftest import CACHE
 
 from oct_report_ocr_spark.jobs.extract_job import run
-from oct_report_ocr_spark.jobs.maintain import audit_sink, vacuum_orphans
+from oct_report_ocr_spark.jobs.maintain import audit_sink
 from oct_report_ocr_spark.synth.gen_corpus import ensure_corpus
 
 
-def test_audit_clean_then_faults_then_vacuum(spark, tmp_path):
+def test_audit_clean_then_faults_then_resume_drops_orphan(spark, tmp_path):
     corpus = ensure_corpus(CACHE, 0.001)
     out = str(tmp_path / "sink")
     run(spark, corpus, out, buckets=8, lang="en")
@@ -42,20 +42,10 @@ def test_audit_clean_then_faults_then_vacuum(spark, tmp_path):
     assert rep[b_gone] == "missing"
     assert rep[b_keep] == "ok"
 
-    # dry-run reports without deleting
-    assert vacuum_orphans(spark, out) == [99]
-    assert os.path.isdir(os.path.join(data, "bucket=99"))
-    # apply deletes exactly the orphan
-    assert vacuum_orphans(spark, out, apply=True) == [99]
+    # a resume run removes exactly the orphan (sink.commit) and leaves
+    # every committed bucket, damaged or not, as it was
+    run(spark, corpus, out, buckets=8, lang="en")
     assert not os.path.isdir(os.path.join(data, "bucket=99"))
     rep = {r.bucket: r.status for r in audit_sink(spark, out).collect()}
     assert 99 not in rep and rep[b_keep] == "ok"
-
-
-def test_vacuum_refuses_remote_sink_uri(spark):
-    """apply=True deletion is driver-local; on a remote URI it must
-    refuse loudly instead of silently deleting nothing (ADVICE r03)."""
-    import pytest
-
-    with pytest.raises(NotImplementedError, match="local paths"):
-        vacuum_orphans(spark, "s3a://bucket/sink", apply=True)
+    assert rep[b_drift] == "checksum_mismatch" and rep[b_gone] == "missing"

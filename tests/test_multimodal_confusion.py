@@ -5,10 +5,10 @@ decode, never a silent fake-feature fallback when the magic is one
 this container actually recognizes.
 
 Grid axes: row ``kind`` (image / audio) × payload format (BMP, P6-PPM,
-PNG, JPEG, RIFF/WAVE, unknown). Plus header-vs-payload confusion
+PNG, JPEG, GIF, RIFF/WAVE, unknown). Plus header-vs-payload confusion
 inside WAV (PCM claim over float data, float claim with illegal
 width, inconsistent block align), and the formats recognized but not
-decoded here (JPEG, MP3-in-WAV): DecodeUnavailable.
+decoded here (JPEG, GIF, MP3-in-WAV): DecodeUnavailable.
 """
 
 import os
@@ -42,10 +42,15 @@ def _raw_wav(tag: int, bits: int, block: int, data: bytes) -> bytes:
     return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
 
 
-# formats recognized but not decoded here: a real JPEG file and an
-# MP3-in-WAV (0x0055) payload
+# formats recognized but not decoded here: a real JPEG file, a real
+# 1x1 GIF89a and an MP3-in-WAV (0x0055) payload
+GIF = (
+    b"GIF89a\x01\x00\x01\x00\x80\x00\x00\xff\xff\xff\x00\x00\x00"
+    b"!\xf9\x04\x01\x00\x00\x00\x00,\x00\x00\x00\x00\x01\x00\x01\x00\x00"
+    b"\x02\x02D\x01\x00;"
+)
 with open(os.path.join(FIXTURES, "multimodal", "rgb_420_20x14.jpg"), "rb") as _f:
-    UNDECODED_IMAGES = {"jpeg": _f.read()}
+    UNDECODED_IMAGES = {"jpeg": _f.read(), "gif": GIF}
 UNDECODED_AUDIO = {"mp3": _raw_wav(0x0055, 16, 2, bytes(64))}
 
 
@@ -119,9 +124,9 @@ def test_wav_block_align_mismatch_quarantines():
 
 
 def test_undecoded_formats_are_decode_unavailable():
-    """JPEG images and MP3-in-WAV payloads have no decoder here: the
-    pure decoders raise DecodeUnavailable, never CorruptImage /
-    CorruptAudio or a decode."""
+    """JPEG and GIF images and MP3-in-WAV payloads have no decoder
+    here: the pure decoders raise DecodeUnavailable, never CorruptImage
+    / CorruptAudio or a decode."""
     for payload in UNDECODED_IMAGES.values():
         for decode in (M.decode_image, M._decode_rgb_array, lambda b: M.sample_frames(b, 2)):
             with pytest.raises(M.DecodeUnavailable):
@@ -164,8 +169,8 @@ def test_featurize_confusion_grid_lands_in_quarantine(spark):
 def test_undecoded_formats_through_the_stages(spark):
     """Through the stages, an undecoded format takes the fake-feature
     path in featurize (decode_error null) and quarantines as
-    decode:DecodeUnavailable in resize / envelope; a JPEG magic in an
-    audio row is still mislabeled data (CorruptAudio)."""
+    decode:DecodeUnavailable in resize / envelope; a JPEG or GIF magic
+    in an audio row is still mislabeled data (CorruptAudio)."""
     rows = [(f"image-{k}", "image", b) for k, b in UNDECODED_IMAGES.items()]
     rows += [(f"audio-{k}", "audio", b) for k, b in UNDECODED_AUDIO.items()]
     rows += [(f"mislabeled-{k}", "audio", b) for k, b in UNDECODED_IMAGES.items()]

@@ -1,14 +1,6 @@
-"""Tests for the multimodal plumbing and the streaming extraction path."""
-
-import os
-
-from pyspark.sql import functions as F
+"""Tests for the multimodal stages: featurize, resize and frame sampling."""
 
 from oct_report_ocr_spark.sources import multimodal
-from oct_report_ocr_spark.streaming.stream_extract import sessionize_stream, stream_extract
-from oct_report_ocr_spark.synth.gen_corpus import ensure_corpus
-
-from .conftest import CACHE, SF_SMOKE
 
 
 def test_multimodal_featurize(spark):
@@ -29,7 +21,7 @@ def test_multimodal_featurize(spark):
 
 
 def test_multimodal_real_decode_in_distributed_path(spark):
-    """VERDICT r01 item 9: the BMP/PPM/PNG/GIF kernels run inside the media kernel —
+    """VERDICT r01 item 9: the BMP/PPM/PNG kernels run inside the media kernel —
     decoded rows carry true (w, h, mean-RGB) features, corrupt images
     land in quarantine, non-decodable kinds keep the fake path."""
     media = multimodal.synth_media(spark, n=64)
@@ -116,10 +108,9 @@ def test_resize_distributed_with_quarantine(spark):
 
 
 def test_frame_sample_distributed(spark):
-    """Explode-shaped frame sampling: real FV01 videos AND animated
-    GIFs (rotating) yield one row per sampled frame (every_k incl.
-    frame 0) with correct pixel bytes; corrupt containers and opaque
-    payloads yield quarantine rows."""
+    """Explode-shaped frame sampling: real FV01 videos yield one row
+    per sampled frame (every_k incl. frame 0) with correct pixel bytes;
+    corrupt containers and opaque payloads yield quarantine rows."""
     media = multimodal.synth_media(spark, n=64)
     rows = multimodal.frame_sample(media, every_k=2, partitions=8).collect()
     by_id: dict = {}
@@ -146,160 +137,3 @@ def test_frame_sample_distributed(spark):
         else:
             assert len(rs) == 1 and rs[0].decode_error == "decode:DecodeUnavailable"
     assert real >= 3 and corrupt >= 1
-
-
-def test_stream_extract_exactly_once(spark, tmp_path):
-    """availableNow micro-batch run twice: second run adds nothing
-    (checkpoint = the principled CSV-resume, D10)."""
-    corpus = ensure_corpus(CACHE, 0.001)
-    in_dir = str(tmp_path / "in")
-    os.makedirs(in_dir)
-    os.link(corpus, os.path.join(in_dir, "part-0.parquet"))
-    out_dir, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-
-    q = stream_extract(spark, in_dir, out_dir, ckpt)
-    q.awaitTermination(300)
-    n1 = spark.read.parquet(out_dir).count()
-    assert n1 > 300
-
-    q2 = stream_extract(spark, in_dir, out_dir, ckpt)
-    q2.awaitTermination(300)
-    n2 = spark.read.parquet(out_dir).count()
-    assert n2 == n1  # no reprocessing, no duplicates
-
-    # per-url equality with the batch path on a sample
-    from oct_report_ocr_spark.extract import extract_one
-
-    sample = spark.read.parquet(out_dir).limit(20).collect()
-    docs = {r.url: r for r in spark.read.parquet(corpus).filter(F.col("lang") == "en").collect()}
-    for r in sample:
-        want = extract_one(docs[r.url].html, r.url)
-        assert r.extracted_text == want.extracted_text
-
-
-def test_sessionize_stream_batch_form(spark):
-    ev = spark.read.parquet(os.path.join(SF_SMOKE, "events.parquet"))
-    out = sessionize_stream(ev).collect()
-    assert len(out) > 0
-    assert all(r.session_start <= r.session_end for r in out)
-    assert sum(r.n_events for r in out) == ev.count()
-
-
-def test_crawl_monitor_stream_matches_batch(spark, tmp_path):
-    """The windowed (window, tier) crawl monitor must produce the
-    IDENTICAL cells from a Structured Streaming availableNow run
-    (complete mode — the final open windows must be visible at stop)
-    and from the same expression over a batch read of the corpus."""
-    from oct_report_ocr_spark.streaming.stream_extract import (
-        CORPUS_DDL,
-        crawl_monitor_stream,
-    )
-
-    corpus = ensure_corpus(CACHE, 0.001)
-    in_dir = str(tmp_path / "in")
-    os.makedirs(in_dir)
-    os.link(corpus, os.path.join(in_dir, "part-0.parquet"))
-
-    batch = {
-        tuple(r) for r in crawl_monitor_stream(spark.read.parquet(corpus)).collect()
-    }
-    docs = spark.readStream.schema(CORPUS_DDL).parquet(in_dir)
-    q = (
-        crawl_monitor_stream(docs)
-        .writeStream.format("memory")
-        .queryName("crawl_monitor")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = {tuple(r) for r in spark.sql("SELECT * FROM crawl_monitor").collect()}
-    assert got == batch and len(got) > 0
-    # the tier vocabulary is the shared rule's
-    assert {t for (_, _, t, _, _) in got} <= {"high", "mid", "low"}
-    # state is bounded by (windows × tiers): every window is 1h-aligned
-    for ws, we, _t, n, chars in got:
-        assert (we - ws).total_seconds() == 3600
-        assert n > 0 and chars > 0
-
-
-def test_dedup_stream_stateful(spark, tmp_path):
-    """applyInPandasWithState exact dedup: duplicate payloads across
-    micro-batch files collapse to one survivor per fingerprint, and an
-    incremental second run admits nothing already seen (state lives in
-    the checkpoint)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from oct_report_ocr_spark.streaming.stream_extract import CORPUS_DDL, dedup_stream
-
-    in_dir = tmp_path / "in"
-    in_dir.mkdir()
-    out_dir, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-
-    import datetime as dt
-
-    def write_file(name, rows):
-        pq.write_table(
-            pa.table(
-                {
-                    "url": [r[0] for r in rows],
-                    "warc_ts": pa.array(
-                        [r[1] for r in rows], pa.timestamp("us", tz="UTC")
-                    ),
-                    "html": pa.array([r[2] for r in rows], pa.binary()),
-                    "text": pa.array([None] * len(rows), pa.string()),
-                    "lang": ["en"] * len(rows),
-                }
-            ),
-            str(in_dir / name),
-        )
-
-    t0 = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
-    # file A: three distinct payloads, one duplicated within the file
-    write_file("a.parquet", [
-        ("u1", t0, b"<p>one</p>"),
-        ("u2", t0, b"<p>two</p>"),
-        ("u3", t0, b"<p>one</p>"),   # dup of u1 (same batch: lowest url wins)
-    ])
-
-    def run_once():
-        docs = spark.readStream.schema(CORPUS_DDL).parquet(str(in_dir))
-        q = (
-            dedup_stream(docs)
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-
-    run_once()
-    got = {r.url for r in spark.read.parquet(out_dir).collect()}
-    assert got == {"u1", "u2"}
-
-    # file B arrives later: one dup of an already-seen payload, one new
-    write_file("b.parquet", [
-        ("u4", t0 + dt.timedelta(hours=1), b"<p>one</p>"),  # cross-batch dup
-        ("u5", t0 + dt.timedelta(hours=1), b"<p>three</p>"),
-    ])
-    run_once()
-    got = {r.url for r in spark.read.parquet(out_dir).collect()}
-    assert got == {"u1", "u2", "u5"}
-
-
-def test_interval_ms_parses_watermark_vocabulary():
-    """dedup_stream's state expiry must track the caller's `watermark`
-    (ADVICE r02: it was hardcoded to 24h regardless of the parameter)."""
-    from oct_report_ocr_spark.streaming.stream_extract import _interval_ms
-
-    assert _interval_ms("1 day") == 24 * 3600 * 1000
-    assert _interval_ms("7 days") == 7 * 24 * 3600 * 1000
-    assert _interval_ms("30 minutes") == 30 * 60 * 1000
-    assert _interval_ms("45 seconds") == 45_000
-    import pytest
-
-    with pytest.raises(ValueError):
-        _interval_ms("fortnight")
