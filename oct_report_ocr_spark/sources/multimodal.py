@@ -11,11 +11,11 @@ Decode kernels, all zero-external-dep (stdlib + numpy) and REAL:
 BMP (24bpp BI_RGB), binary PPM (P6), PNG (every valid IHDR shape:
 gray/RGB/palette/gray+alpha/RGBA, bit depths 1/2/4/8/16,
 non-interlaced and Adam7, full filter reconstruction incl. Paeth),
-WAV (RIFF PCM 8/16/24/32-bit, IEEE float
-32/64-bit, G.711 a-law/μ-law, IMA ADPCM and MS ADPCM, plain or
-WAVE_FORMAT_EXTENSIBLE, real chunk walk) and the minimal FV01 video
-container. Every other format (JPEG, GIF, WebP, MP3/AAC/Opus, real
-video codecs) raises ``DecodeUnavailable``: featurize falls back to a
+WAV (RIFF PCM 8/16/24/32-bit and IEEE float 32/64-bit, real chunk
+walk) and the minimal FV01 video container. Every other format (JPEG,
+GIF, WebP, any other WAVE format tag incl. G.711, ADPCM and
+WAVE_FORMAT_EXTENSIBLE, MP3/AAC/Opus, real video codecs) raises
+``DecodeUnavailable``: featurize falls back to a
 deterministic digest fake, the other stages quarantine the row. A
 recognized magic in a row of the wrong kind (a WAV in an image row, a
 PNG, GIF or JPEG in an audio row) quarantines as
@@ -43,6 +43,9 @@ FEATURE_DDL = (
     "media_id long, kind string, n_bytes long, content_sha256 string, "
     "feature array<float>, decode_error string"
 )
+# length of every feature vector: real image / audio features pad or
+# cut to it, the digest fake takes this many digest bytes
+FEATURE_DIM = 8
 
 
 class DecodeUnavailable(NotImplementedError):
@@ -359,20 +362,20 @@ def _sniff_kind(b: bytes) -> str | None:
     return None
 
 
-def image_feature(content: bytes, dim: int = 8) -> list[float]:
+def image_feature(content: bytes) -> list[float]:
     """Feature vector from a really-decoded image: [w, h, mean_r,
     mean_g, mean_b, aspect, 0, 0] — deterministic, byte-stable."""
     w, h, r, g, b = decode_image(content)
     out = [float(w), float(h), r, g, b, w / h]
-    return (out + [0.0] * dim)[:dim]
+    return (out + [0.0] * FEATURE_DIM)[:FEATURE_DIM]
 
 
-def fake_feature(content: bytes, dim: int = 8) -> list[float]:
+def fake_feature(content: bytes) -> list[float]:
     """Deterministic stand-in for an embedding/feature extractor: unit
     values derived from the payload digest. Stable across batches,
     partitions and retries — usable in tests and plumbing benchmarks."""
     h = hashlib.sha256(content).digest()
-    return [h[i] / 255.0 for i in range(dim)]
+    return [h[i] / 255.0 for i in range(FEATURE_DIM)]
 
 
 def _media_stage(
@@ -380,25 +383,22 @@ def _media_stage(
     ddl: str,
     decode: Callable[[str, bytes], list[tuple]],
     kind: str | None = None,
-    partitions: int | None = None,
     passthrough: tuple[str, ...] = ("media_id",),
 ) -> DataFrame:
     """The one quarantining kernel behind every media stage.
 
     Keeps the rows of ``kind`` (all rows when None) before any Python
-    runs, so the predicate reaches the scan; repartitions by
-    pmod(xxhash64(media_id)) when ``partitions`` is set (payload sizes
-    are skewed, same argument as html pages); then runs a mapInArrow
-    batch function. ``decode(kind, payload)`` returns the non-
-    passthrough, non-error values of ``ddl`` as a list of tuples: one
-    per output row, so a stage may emit several rows per input (frame
-    sampling) or none. An empty or null payload yields one ``"empty"``
-    row and an exception one ``decode:<ExceptionClass>`` row, both null
-    past the passthrough columns: a bad payload quarantines, it never
-    fails the task. Passthrough columns are carried with ``take``."""
+    runs, so the predicate reaches the scan, then runs a mapInArrow
+    batch function over the input's own partitions (a caller that wants
+    another layout repartitions its input). ``decode(kind, payload)``
+    returns the non-passthrough, non-error values of ``ddl`` as a list
+    of tuples: one per output row, so a stage may emit several rows per
+    input (frame sampling) or none. An empty or null payload yields one
+    ``"empty"`` row and an exception one ``decode:<ExceptionClass>``
+    row, both null past the passthrough columns: a bad payload
+    quarantines, it never fails the task. Passthrough columns are
+    carried with ``take``."""
     df = media if kind is None else media.filter(F.col("kind") == kind)
-    if partitions:
-        df = df.repartition(partitions, F.pmod(F.xxhash64("media_id"), F.lit(partitions)))
     df = df.select(*dict.fromkeys((*passthrough, "kind", "content")))
     schema = to_arrow_schema(DataType.fromDDL(ddl))
     value_types = [f.type for f in schema][len(passthrough) : -1]
@@ -448,7 +448,7 @@ def _feature(kind: str, b: bytes) -> list[tuple]:
     return [(fake_feature(b),)]
 
 
-def featurize(media: DataFrame, partitions: int | None = None) -> DataFrame:
+def featurize(media: DataFrame) -> DataFrame:
     """The multimodal feature pipeline: (media_id, kind, content, meta)
     → one FEATURE_DDL row per media row. ``n_bytes`` and
     ``content_sha256`` are native expressions (the sha is null for an
@@ -460,7 +460,7 @@ def featurize(media: DataFrame, partitions: int | None = None) -> DataFrame:
         }
     )
     return _media_stage(
-        df, FEATURE_DDL, _feature, partitions=partitions,
+        df, FEATURE_DDL, _feature,
         passthrough=("media_id", "kind", "n_bytes", "content_sha256"),
     )
 
@@ -522,7 +522,7 @@ RESIZE_DDL = (
 )
 
 
-def resize(media: DataFrame, out_w: int, out_h: int, partitions: int | None = None) -> DataFrame:
+def resize(media: DataFrame, out_w: int, out_h: int) -> DataFrame:
     """Distributed nearest-neighbor resize of the image rows to
     (out_w, out_h) P6 PPM, with per-row quarantine."""
 
@@ -530,7 +530,7 @@ def resize(media: DataFrame, out_w: int, out_h: int, partitions: int | None = No
         w, h, *_ = decode_image(b)
         return [(w, h, out_w, out_h, resize_image(b, out_w, out_h))]
 
-    return _media_stage(media, RESIZE_DDL, decode, kind="image", partitions=partitions)
+    return _media_stage(media, RESIZE_DDL, decode, kind="image")
 
 
 # --------------------------------------------------------------------------
@@ -586,235 +586,24 @@ def sample_frames(content: bytes, every_k: int) -> list[tuple[int, int, int, byt
     return out
 
 
-def frame_sample(media: DataFrame, every_k: int = 2, partitions: int | None = None) -> DataFrame:
+def frame_sample(media: DataFrame, every_k: int = 2) -> DataFrame:
     """Distributed frame sampling of the video rows: one OUTPUT row per
     sampled frame (the row count grows inside the kernel, so no
     upstream explode materializes whole videos as Spark rows).
     Undecodable/corrupt payloads yield a single quarantine row."""
     return _media_stage(
-        media, FRAME_DDL, lambda _kind, b: sample_frames(b, every_k),
-        kind="video", partitions=partitions,
+        media, FRAME_DDL, lambda _kind, b: sample_frames(b, every_k), kind="video"
     )
 
 
 # --------------------------------------------------------------------------
-# Audio decode, pure stdlib + numpy: WAV (RIFF PCM / IEEE float) plus
-# the table/formula codecs that need no library either: ITU-T G.711
-# a-law/μ-law (companded telephony 8-bit), IMA/DVI ADPCM (4-bit
-# block-adaptive delta) and Microsoft ADPCM (4-bit, two-sample linear
-# predictor with a per-block coefficient choice). MP3, AAC and Opus
-# raise DecodeUnavailable.
+# Audio decode, pure stdlib + numpy: WAV (RIFF PCM / IEEE float). Every
+# other WAVE format tag (G.711, ADPCM, WAVE_FORMAT_EXTENSIBLE, MP3, ...)
+# and every non-WAV payload (MP3, AAC, Opus) raises DecodeUnavailable.
 # --------------------------------------------------------------------------
 
-# WAVE format tags (RIFF spec). 0xFFFE wraps the real tag in a GUID.
-_WAV_PCM, _WAV_FLOAT, _WAV_EXTENSIBLE = 0x0001, 0x0003, 0xFFFE
-_WAV_ALAW, _WAV_MULAW, _WAV_IMA_ADPCM = 0x0006, 0x0007, 0x0011
-_WAV_MS_ADPCM = 0x0002
-# KSDATAFORMAT GUIDs: the 16-bit format tag little-endian + fixed suffix
-_KS_SUFFIX = b"\x00\x00\x00\x00\x10\x00\x80\x00\x00\xaa\x00\x38\x9b\x71"
-
-
-def _g711_table(tag: int):
-    """256-entry code → linear float64 lookup for ITU-T G.711 (the
-    classic public-domain g711.c formulas, vectorized): μ-law is
-    complement → biased mantissa shift; a-law is XOR 0x55 → segmented
-    expansion. Output normalized by 32768 (μ-law peaks at ±32124,
-    a-law at ±32256 — both inside int16)."""
-    import numpy as np
-
-    codes = np.arange(256, dtype=np.int32)
-    if tag == _WAV_MULAW:
-        u = ~codes & 0xFF
-        t = (((u & 0x0F) << 3) + 0x84) << ((u & 0x70) >> 4)
-        lin = np.where(u & 0x80, 0x84 - t, t - 0x84)
-    else:
-        a = codes ^ 0x55
-        t = (a & 0x0F) << 4
-        seg = (a & 0x70) >> 4
-        base = np.where(seg == 0, t + 8, t + 0x108)
-        lin = np.where(seg >= 2, (t + 0x108) << np.clip(seg - 1, 0, None), base)
-        lin = np.where(a & 0x80, lin, -lin)
-    return lin.astype(np.float64) / 32768.0
-
-
-# IMA/DVI ADPCM quantizer tables (IMA ADPCM reference algorithm, 1992)
-_IMA_STEP = (
-    7, 8, 9, 10, 11, 12, 13, 14, 16, 17, 19, 21, 23, 25, 28, 31, 34, 37,
-    41, 45, 50, 55, 60, 66, 73, 80, 88, 97, 107, 118, 130, 143, 157, 173,
-    190, 209, 230, 253, 279, 307, 337, 371, 408, 449, 494, 544, 598, 658,
-    724, 796, 876, 963, 1060, 1166, 1282, 1411, 1552, 1707, 1878, 2066,
-    2272, 2499, 2749, 3024, 3327, 3660, 4026, 4428, 4871, 5358, 5894,
-    6484, 7132, 7845, 8630, 9493, 10442, 11487, 12635, 13899, 15289,
-    16818, 18500, 20350, 22385, 24623, 27086, 29794, 32767,
-)
-_IMA_INDEX = (-1, -1, -1, -1, 2, 4, 6, 8)
-
-
-def _ima_nibble(nib: int, pred: int, idx: int) -> tuple[int, int]:
-    """One IMA ADPCM quantizer step: nibble + (predictor, step index) →
-    updated (predictor, step index). Shared verbatim by the decoder and
-    the test encoder so their state machines can never drift."""
-    step = _IMA_STEP[idx]
-    diff = step >> 3
-    if nib & 1:
-        diff += step >> 2
-    if nib & 2:
-        diff += step >> 1
-    if nib & 4:
-        diff += step
-    pred = pred - diff if nib & 8 else pred + diff
-    pred = max(-32768, min(32767, pred))
-    idx = max(0, min(88, idx + _IMA_INDEX[nib & 7]))
-    return pred, idx
-
-
-def _ima_adpcm_decode(data: bytes, channels: int, block_align: int):
-    """IMA ADPCM 'data' chunk → (n_frames, channels) float64 in [-1, 1].
-
-    Block layout per the IMA WAV mapping: each block starts with a
-    4-byte header per channel (int16 predictor = first sample, uint8
-    step index, reserved), then the remaining bytes are 4-byte /
-    8-nibble groups interleaved channel by channel, low nibble first.
-    Per-sample Python loop — the quarantine-grade correctness kernel,
-    same idiom as the PNG left-dependent unfilter; malformed blocks
-    (bad align, short tail, step index > 88) quarantine."""
-    import struct
-
-    import numpy as np
-
-    if block_align < 4 * channels or (block_align - 4 * channels) % (4 * channels):
-        raise CorruptAudio("wav: ima adpcm block align invalid for channel count")
-    if not data or len(data) % block_align:
-        raise CorruptAudio("wav: data size not a whole number of adpcm blocks")
-    groups_per_block = (block_align - 4 * channels) // (4 * channels)
-    out = []
-    for boff in range(0, len(data), block_align):
-        preds, idxs = [], []
-        chans: list[list[int]] = []
-        for c in range(channels):
-            pred, idx, _rsv = struct.unpack_from("<hBB", data, boff + 4 * c)
-            if idx > 88:
-                raise CorruptAudio("wav: adpcm step index out of range")
-            preds.append(pred)
-            idxs.append(idx)
-            chans.append([pred])
-        body = boff + 4 * channels
-        for g in range(groups_per_block):
-            for c in range(channels):
-                goff = body + (g * channels + c) * 4
-                for byte in data[goff : goff + 4]:
-                    for nib in (byte & 0x0F, byte >> 4):
-                        preds[c], idxs[c] = _ima_nibble(nib, preds[c], idxs[c])
-                        chans[c].append(preds[c])
-        out.append(np.array(chans, dtype=np.float64).T / 32768.0)
-    return np.concatenate(out, axis=0)
-
-
-# Microsoft ADPCM fixed tables (RIFF/WAVE spec, WAVE_FORMAT_ADPCM).
-# The first 7 coefficient pairs are mandated by the format; encoders
-# may append more via the fmt-chunk extension.
-_MS_ADAPT = (230, 230, 230, 230, 307, 409, 512, 614,
-             768, 614, 512, 409, 307, 230, 230, 230)
-_MS_COEFS = ((256, 0), (512, -256), (0, 0), (192, 64),
-             (240, 0), (460, -208), (392, -232))
-
-
-def _ms_trunc256(q: int) -> int:
-    """C-style truncation toward zero of q/256 — the spec's integer
-    division, NOT an arithmetic shift (they differ on negatives)."""
-    return q // 256 if q >= 0 else -((-q) // 256)
-
-
-def _ms_nibble(nib: int, s1: int, s2: int, delta: int, c1: int, c2: int):
-    """One MS ADPCM step: unsigned nibble + (sample1, sample2, delta)
-    → (new sample, new delta). Shared verbatim by the decoder and the
-    test encoder so their state machines can never drift."""
-    signed = nib - 16 if nib >= 8 else nib
-    pred = _ms_trunc256(s1 * c1 + s2 * c2) + signed * delta
-    pred = max(-32768, min(32767, pred))
-    delta = (_MS_ADAPT[nib] * delta) // 256
-    return pred, max(16, delta)
-
-
-def _ms_adpcm_coefs(fmt: bytes):
-    """Coefficient pairs from the fmt-chunk extension (cbSize +
-    wSamplesPerBlock + wNumCoef + pairs); the spec's fixed 7 when the
-    extension is absent (e.g. WAVE_FORMAT_EXTENSIBLE wrapping). A
-    declared-but-truncated extension quarantines. Returns
-    (coefs, samples_per_block_or_None)."""
-    import struct
-
-    if len(fmt) < 18:
-        return _MS_COEFS, None
-    (cb,) = struct.unpack_from("<H", fmt, 16)
-    if cb == 0:
-        return _MS_COEFS, None
-    if cb < 4 or len(fmt) < 18 + cb:
-        raise CorruptAudio("wav: ms adpcm fmt extension truncated")
-    spb, ncoef = struct.unpack_from("<HH", fmt, 18)
-    if ncoef < 1 or cb < 4 + 4 * ncoef:
-        raise CorruptAudio("wav: ms adpcm coefficient table truncated")
-    coefs = tuple(
-        struct.unpack_from("<hh", fmt, 22 + 4 * i) for i in range(ncoef)
-    )
-    return coefs, spb
-
-
-def _ms_adpcm_decode(data: bytes, channels: int, block_align: int, fmt: bytes):
-    """MS ADPCM 'data' chunk → (n_frames, channels) float64 in [-1, 1].
-
-    Block layout per the RIFF spec: per channel a uint8 predictor index
-    (into the coefficient table), then per channel an int16 initial
-    delta, an int16 sample1 and an int16 sample2; sample2/sample1 are
-    the block's first two output frames, then each remaining byte holds
-    two 4-bit codes HIGH nibble first, channel-interleaved per frame.
-    Per-sample Python loop — the quarantine-grade correctness kernel,
-    same idiom as the IMA decoder; malformed blocks (align too small,
-    predictor index past the table, partial trailing block) quarantine."""
-    import struct
-
-    import numpy as np
-
-    coefs, spb_declared = _ms_adpcm_coefs(fmt)
-    hdr = 7 * channels
-    if block_align <= hdr:
-        raise CorruptAudio("wav: ms adpcm block align too small for header")
-    if not data or len(data) % block_align:
-        raise CorruptAudio("wav: data size not a whole number of adpcm blocks")
-    nib_frames = (block_align - hdr) * 2 // channels
-    if (block_align - hdr) * 2 % channels:
-        raise CorruptAudio("wav: ms adpcm block align misfits channel count")
-    if spb_declared is not None and spb_declared != nib_frames + 2:
-        raise CorruptAudio("wav: ms adpcm samples-per-block disagrees with block align")
-    out = []
-    for boff in range(0, len(data), block_align):
-        pred_i, deltas, s1, s2 = [], [], [], []
-        for c in range(channels):
-            k = data[boff + c]
-            if k >= len(coefs):
-                raise CorruptAudio("wav: ms adpcm predictor index out of range")
-            pred_i.append(k)
-        for c in range(channels):
-            deltas.append(struct.unpack_from("<h", data, boff + channels + 2 * c)[0])
-        for c in range(channels):
-            s1.append(struct.unpack_from("<h", data, boff + 3 * channels + 2 * c)[0])
-        for c in range(channels):
-            s2.append(struct.unpack_from("<h", data, boff + 5 * channels + 2 * c)[0])
-        chans: list[list[int]] = [[s2[c], s1[c]] for c in range(channels)]
-        nib_iter = (
-            (byte >> 4) if half == 0 else (byte & 0x0F)
-            for byte in data[boff + hdr : boff + block_align]
-            for half in (0, 1)
-        )
-        for _f in range(nib_frames):
-            for c in range(channels):
-                nib = next(nib_iter)
-                c1, c2 = coefs[pred_i[c]]
-                new, deltas[c] = _ms_nibble(nib, s1[c], s2[c], deltas[c], c1, c2)
-                s2[c], s1[c] = s1[c], new
-                chans[c].append(new)
-        out.append(np.array(chans, dtype=np.float64).T / 32768.0)
-    return np.concatenate(out, axis=0)
+# WAVE format tags (RIFF spec): the two this module decodes
+_WAV_PCM, _WAV_FLOAT = 0x0001, 0x0003
 
 ENVELOPE_DDL = (
     "media_id long, sample_rate int, channels int, n_frames long, "
@@ -828,11 +617,10 @@ def _wav_samples(b: bytes):
 
     Real chunk walk (fmt/data found by iteration, unknown chunks
     skipped, word-aligned sizes honored) — not an offset guess. PCM
-    8/16/24/32-bit, IEEE float 32/64-bit, G.711 a-law/μ-law,
-    IMA/DVI ADPCM and Microsoft ADPCM, plus WAVE_FORMAT_EXTENSIBLE
-    wrapping any of them. Malformed structure raises CorruptAudio;
-    genuinely-unsupported codecs (MP3/AAC/Opus) raise
-    DecodeUnavailable."""
+    8/16/24/32-bit and IEEE float 32/64-bit only. Malformed structure
+    raises CorruptAudio; every other format tag (G.711, ADPCM,
+    WAVE_FORMAT_EXTENSIBLE, MP3-in-WAV, ...) and every non-WAV codec
+    (MP3/AAC/Opus) raises DecodeUnavailable."""
     import struct
 
     import numpy as np
@@ -864,52 +652,20 @@ def _wav_samples(b: bytes):
     if len(fmt) < 16:
         raise CorruptAudio("wav: fmt chunk too short")
     tag, channels, rate, _brate, block_align, bits = struct.unpack_from("<HHIIHH", fmt, 0)
-    if tag == _WAV_EXTENSIBLE:
-        if len(fmt) < 40:
-            raise CorruptAudio("wav: extensible fmt truncated")
-        guid = fmt[24:40]
-        (sub,) = struct.unpack_from("<H", guid, 0)
-        if guid[2:] != _KS_SUFFIX or sub not in (
-            _WAV_PCM, _WAV_FLOAT, _WAV_ALAW, _WAV_MULAW, _WAV_IMA_ADPCM,
-            _WAV_MS_ADPCM,
-        ):
-            raise DecodeUnavailable("wav: unsupported extensible subformat")
-        tag = sub
-        # the extension bytes belong to the EXTENSIBLE struct (valid
-        # bits + channel mask + GUID), not to the wrapped codec — MS
-        # ADPCM must fall back to the spec's fixed coefficient table
-        fmt = fmt[:16]
-    if tag not in (
-        _WAV_PCM, _WAV_FLOAT, _WAV_ALAW, _WAV_MULAW, _WAV_IMA_ADPCM, _WAV_MS_ADPCM,
-    ):
-        raise DecodeUnavailable(
-            f"wav: codec 0x{tag:04x} not supported (PCM/float/G.711/ADPCM only)"
-        )
+    if tag not in (_WAV_PCM, _WAV_FLOAT):
+        raise DecodeUnavailable(f"wav: codec 0x{tag:04x} not supported (PCM/float only)")
     if channels == 0 or rate == 0:
         raise CorruptAudio("wav: zero channels or sample rate")
     if tag == _WAV_PCM and bits not in (8, 16, 24, 32):
         raise DecodeUnavailable(f"wav: {bits}-bit PCM not supported")
     if tag == _WAV_FLOAT and bits not in (32, 64):
         raise DecodeUnavailable(f"wav: {bits}-bit float not supported")
-    if tag in (_WAV_ALAW, _WAV_MULAW) and bits != 8:
-        raise CorruptAudio(f"wav: G.711 requires 8 bits per sample, got {bits}")
-    if tag == _WAV_IMA_ADPCM:
-        if bits != 4:
-            raise CorruptAudio(f"wav: IMA ADPCM requires 4 bits per sample, got {bits}")
-        return rate, channels, _ima_adpcm_decode(data, channels, block_align)
-    if tag == _WAV_MS_ADPCM:
-        if bits != 4:
-            raise CorruptAudio(f"wav: MS ADPCM requires 4 bits per sample, got {bits}")
-        return rate, channels, _ms_adpcm_decode(data, channels, block_align, fmt)
     frame_bytes = channels * (bits // 8)
     if block_align and block_align != frame_bytes:
         raise CorruptAudio("wav: block align disagrees with channels*bits")
     if len(data) % frame_bytes:
         raise CorruptAudio("wav: data size not a whole number of frames")
     n = len(data) // (bits // 8)
-    if tag in (_WAV_ALAW, _WAV_MULAW):
-        arr = _g711_table(tag)[np.frombuffer(data, dtype=np.uint8, count=n)]
-        return rate, channels, arr.reshape(-1, channels)
     if tag == _WAV_FLOAT:
         arr = np.frombuffer(data, dtype="<f4" if bits == 32 else "<f8", count=n).astype(np.float64)
     elif bits == 8:  # 8-bit PCM is unsigned, midpoint 128
@@ -945,14 +701,14 @@ def decode_audio(content: bytes) -> tuple[int, int, int, float, float, float, fl
     return rate, channels, n_frames, n_frames / rate, rms, peak, zcr
 
 
-def audio_feature(content: bytes, dim: int = 8) -> list[float]:
+def audio_feature(content: bytes) -> list[float]:
     """Feature vector from a really-decoded audio payload: [sample_rate,
     channels, n_frames, duration_s, rms, peak, zcr, 0] — same
     deterministic byte-stable contract as image_feature (leads with a
     value ≥ 1, so it is distinguishable from the digest fake)."""
     rate, ch, n, dur, rms, peak, zcr = decode_audio(content)
     out = [float(rate), float(ch), float(n), dur, rms, peak, zcr]
-    return (out + [0.0] * dim)[:dim]
+    return (out + [0.0] * FEATURE_DIM)[:FEATURE_DIM]
 
 
 def audio_envelope(content: bytes, n_windows: int) -> tuple[int, int, int, list[float]]:
@@ -975,7 +731,7 @@ def audio_envelope(content: bytes, n_windows: int) -> tuple[int, int, int, list[
     return rate, channels, n, [float(x) for x in env]
 
 
-def envelope(media: DataFrame, n_windows: int = 16, partitions: int | None = None) -> DataFrame:
+def envelope(media: DataFrame, n_windows: int = 16) -> DataFrame:
     """Distributed audio-envelope stage (the audio analogue of resize):
     per-window RMS envelope of the audio rows, with per-row quarantine."""
 
@@ -983,7 +739,7 @@ def envelope(media: DataFrame, n_windows: int = 16, partitions: int | None = Non
         rate, ch, n, env = audio_envelope(b, n_windows)
         return [(rate, ch, n, n / rate, env)]
 
-    return _media_stage(media, ENVELOPE_DDL, decode, kind="audio", partitions=partitions)
+    return _media_stage(media, ENVELOPE_DDL, decode, kind="audio")
 
 
 def make_wav(
@@ -993,19 +749,11 @@ def make_wav(
     seed: int = 0,
     bits: int = 16,
     fmt: str = "pcm",
-    extensible: bool = False,
 ) -> bytes:
     """Deterministic WAV encoder for tests: sample s of channel c is the
     closed-form ramp ((seed + 7*s + 3*c) % 509 - 254) / 254, quantized
     to the target width — so every decode has an exact ground truth.
-    fmt: "pcm" (8/16/24/32 per ``bits``), "float" (32/64), "alaw" /
-    "mulaw" (G.711 via exact nearest-code quantization against the
-    decode table), "ima_adpcm" (greedy reference encoder sharing
-    ``_ima_nibble`` with the decoder; 17-sample blocks, input padded
-    to a whole block by repeating the last frame), "ms_adpcm" (greedy
-    encoder sharing ``_ms_nibble``; tries all 7 coefficient pairs per
-    block per channel and keeps the lowest-error predictor; 16-sample
-    blocks, same padding rule)."""
+    fmt: "pcm" (8/16/24/32 per ``bits``) or "float" (32/64)."""
     import struct
 
     import numpy as np
@@ -1013,109 +761,9 @@ def make_wav(
     s = np.arange(n_frames)[:, None]
     c = np.arange(channels)[None, :]
     vals = ((seed + 7 * s + 3 * c) % 509 - 254) / 254.0  # in [-1, 1]
-    block = None
     if fmt == "float":
         data = vals.astype("<f4" if bits == 32 else "<f8").tobytes()
         tag = _WAV_FLOAT
-    elif fmt in ("alaw", "mulaw"):
-        tag = _WAV_ALAW if fmt == "alaw" else _WAV_MULAW
-        table = _g711_table(tag)
-        codes = np.abs(vals.reshape(-1, 1) - table[None, :]).argmin(axis=1)
-        data = codes.astype(np.uint8).tobytes()
-        bits = 8
-    elif fmt == "ima_adpcm":
-        k = 2  # 4-byte nibble groups per channel per block
-        spb = 1 + 8 * k  # samples per block (header carries sample 0)
-        pcm = np.round(vals * 32767).astype(np.int64)
-        pad = (-pcm.shape[0]) % spb
-        if pad:
-            pcm = np.concatenate([pcm, np.repeat(pcm[-1:], pad, axis=0)])
-        # seed each channel's step index near the signal's typical
-        # per-sample delta (the decoder reads it from the block header,
-        # so any choice is valid — this one skips the cold-start
-        # transient a zero index would cause on steep signals)
-        steps = np.array(_IMA_STEP, dtype=np.int64)
-        idxs = [
-            int(np.abs(steps - max(float(np.abs(np.diff(pcm[:, ch_])).mean()), 7.0)).argmin())
-            if pcm.shape[0] > 1 else 0
-            for ch_ in range(channels)
-        ]
-        blocks = bytearray()
-        for b0 in range(0, pcm.shape[0], spb):
-            preds = [int(pcm[b0, ch_]) for ch_ in range(channels)]
-            for ch_ in range(channels):
-                blocks += struct.pack("<hBB", preds[ch_], idxs[ch_], 0)
-            for g in range(k):
-                for ch_ in range(channels):
-                    word = 0
-                    for j in range(8):
-                        sample = int(pcm[b0 + 1 + g * 8 + j, ch_])
-                        step = _IMA_STEP[idxs[ch_]]
-                        diff = sample - preds[ch_]
-                        nib = 8 if diff < 0 else 0
-                        diff = abs(diff)
-                        if diff >= step:
-                            nib |= 4
-                            diff -= step
-                        if diff >= step >> 1:
-                            nib |= 2
-                            diff -= step >> 1
-                        if diff >= step >> 2:
-                            nib |= 1
-                        preds[ch_], idxs[ch_] = _ima_nibble(nib, preds[ch_], idxs[ch_])
-                        word |= nib << (4 * j)
-                    blocks += struct.pack("<I", word)
-        data = bytes(blocks)
-        tag = _WAV_IMA_ADPCM
-        bits = 4
-        block = 4 * channels * (1 + k)
-    elif fmt == "ms_adpcm":
-        spb = 16  # 2 header samples + 14 coded → 7 nibble bytes/channel
-        pcm = np.round(vals * 32767).astype(np.int64)
-        pad = (-pcm.shape[0]) % spb
-        if pad:
-            pcm = np.concatenate([pcm, np.repeat(pcm[-1:], pad, axis=0)])
-        blocks = bytearray()
-        for b0 in range(0, pcm.shape[0], spb):
-            blk = pcm[b0 : b0 + spb]
-            # per channel: greedy-encode under every coefficient pair,
-            # keep the lowest-error predictor (exercises the whole table)
-            best = []
-            for ch_ in range(channels):
-                init_delta = max(16, int(np.abs(np.diff(blk[:, ch_])).mean() / 4) if spb > 1 else 16)
-                cand = None
-                for k_, (c1, c2) in enumerate(_MS_COEFS):
-                    s1, s2, delta = int(blk[1, ch_]), int(blk[0, ch_]), init_delta
-                    nibs, err = [], 0
-                    for t in range(2, spb):
-                        want = int(blk[t, ch_])
-                        base = _ms_trunc256(s1 * c1 + s2 * c2)
-                        raw = (want - base) / delta if delta else 0.0
-                        signed = max(-8, min(7, int(round(raw))))
-                        nib = signed & 0x0F
-                        new, delta = _ms_nibble(nib, s1, s2, delta, c1, c2)
-                        err += (want - new) ** 2
-                        s2, s1 = s1, new
-                        nibs.append(nib)
-                    if cand is None or err < cand[0]:
-                        cand = (err, k_, init_delta, nibs)
-                best.append(cand)
-            for ch_ in range(channels):
-                blocks += bytes([best[ch_][1]])
-            for ch_ in range(channels):
-                blocks += struct.pack("<h", best[ch_][2])
-            for ch_ in range(channels):
-                blocks += struct.pack("<h", int(blk[1, ch_]))
-            for ch_ in range(channels):
-                blocks += struct.pack("<h", int(blk[0, ch_]))
-            # channel-interleaved codes, high nibble first
-            flat = [best[ch_][3][t] for t in range(spb - 2) for ch_ in range(channels)]
-            for i in range(0, len(flat), 2):
-                blocks += bytes([(flat[i] << 4) | flat[i + 1]])
-        data = bytes(blocks)
-        tag = _WAV_MS_ADPCM
-        bits = 4
-        block = 7 * channels + (spb - 2) * channels // 2
     elif bits == 8:
         data = (np.round(vals * 127) + 128).astype(np.uint8).tobytes()
         tag = _WAV_PCM
@@ -1132,21 +780,8 @@ def make_wav(
         dt = np.int16 if bits == 16 else np.int32
         data = np.round(vals * lim).astype(np.dtype(dt).newbyteorder("<")).tobytes()
         tag = _WAV_PCM
-    if block is None:
-        block = channels * (bits // 8)
-    if extensible:
-        guid = struct.pack("<H", tag) + _KS_SUFFIX
-        fmt_body = struct.pack(
-            "<HHIIHHHHI", _WAV_EXTENSIBLE, channels, rate, rate * block, block, bits, 22, bits, 0
-        ) + guid
-    else:
-        fmt_body = struct.pack("<HHIIHH", tag, channels, rate, rate * block, block, bits)
-        if tag == _WAV_MS_ADPCM:
-            spb_hdr = (block - 7 * channels) * 2 // channels + 2
-            ext = struct.pack("<HH", spb_hdr, len(_MS_COEFS))
-            for c1, c2 in _MS_COEFS:
-                ext += struct.pack("<hh", c1, c2)
-            fmt_body += struct.pack("<H", len(ext)) + ext
+    block = channels * (bits // 8)
+    fmt_body = struct.pack("<HHIIHH", tag, channels, rate, rate * block, block, bits)
     chunks = (
         b"fmt " + struct.pack("<I", len(fmt_body)) + fmt_body
         + b"data" + struct.pack("<I", len(data)) + data + (b"\x00" if len(data) & 1 else b"")
@@ -1277,10 +912,7 @@ def make_png(
 
 # synth_media's rotations, shared with the tests that check its rows
 SYNTH_IMAGE_MAKERS = (make_bmp, make_ppm, make_png)
-SYNTH_WAV_FORMATS = (
-    (8, "pcm"), (16, "pcm"), (24, "pcm"), (32, "float"),
-    (8, "mulaw"), (8, "alaw"), (4, "ima_adpcm"), (4, "ms_adpcm"),
-)
+SYNTH_WAV_FORMATS = ((8, "pcm"), (16, "pcm"), (24, "pcm"), (32, "float"))
 SYNTH_VIDEO_MAKERS = (make_fvid,)
 
 
@@ -1290,10 +922,10 @@ def synth_media(spark, n: int = 64):
     carries a REAL decodable payload (rotating BMP/PPM/PNG) so the
     real decode kernel is exercised in the distributed path; every 13th
     image row is a corrupt BMP (quarantine path). Audio rows mirror the
-    scheme with WAV payloads (rotating 8/16/24-bit PCM, 32-bit float,
-    G.711 and both ADPCM families / truncated-chunk corrupt / opaque
-    bytes), and video rows with FV01 containers (real frame-sample path
-    / corrupt container / opaque bytes)."""
+    scheme with WAV payloads (rotating 8/16/24-bit PCM and 32-bit float
+    / truncated-chunk corrupt / opaque bytes), and video rows with FV01
+    containers (real frame-sample path / corrupt container / opaque
+    bytes)."""
     rows = []
     for i in range(n):
         size = (i * 977) % 4096 + (8192 if i % 11 == 0 else 0)

@@ -8,7 +8,8 @@ Grid axes: row ``kind`` (image / audio) × payload format (BMP, P6-PPM,
 PNG, JPEG, GIF, RIFF/WAVE, unknown). Plus header-vs-payload confusion
 inside WAV (PCM claim over float data, float claim with illegal
 width, inconsistent block align), and the formats recognized but not
-decoded here (JPEG, GIF, MP3-in-WAV): DecodeUnavailable.
+decoded here (JPEG, GIF, every WAVE format tag but PCM and float):
+DecodeUnavailable.
 """
 
 import os
@@ -32,9 +33,10 @@ IMAGE_PAYLOADS = {
 }
 
 
-def _raw_wav(tag: int, bits: int, block: int, data: bytes) -> bytes:
-    """A mono 8 kHz RIFF/WAVE with the given format tag."""
-    fmt = struct.pack("<HHIIHH", tag, 1, 8000, 8000 * block, block, bits)
+def _raw_wav(tag: int, bits: int, block: int, data: bytes, ext: bytes = b"") -> bytes:
+    """A mono 8 kHz RIFF/WAVE with the given format tag; ``ext`` is
+    appended to the 16-byte fmt body (cbSize and what follows)."""
+    fmt = struct.pack("<HHIIHH", tag, 1, 8000, 8000 * block, block, bits) + ext
     chunks = (
         b"fmt " + struct.pack("<I", len(fmt)) + fmt
         + b"data" + struct.pack("<I", len(data)) + data + b"\x00" * (len(data) & 1)
@@ -43,7 +45,11 @@ def _raw_wav(tag: int, bits: int, block: int, data: bytes) -> bytes:
 
 
 # formats recognized but not decoded here: a real JPEG file, a real
-# 1x1 GIF89a and an MP3-in-WAV (0x0055) payload
+# 1x1 GIF89a, and WAVs whose format tag is neither PCM nor float, each
+# well-formed for its codec: MP3 (0x0055), G.711 a-law (0x0006) and
+# μ-law (0x0007), IMA ADPCM (0x0011: 4-byte header + 8 nibble words
+# per block), MS ADPCM (0x0002: 7-byte header + 7 nibble bytes per
+# block) and WAVE_FORMAT_EXTENSIBLE (0xFFFE) wrapping 16-bit PCM
 GIF = (
     b"GIF89a\x01\x00\x01\x00\x80\x00\x00\xff\xff\xff\x00\x00\x00"
     b"!\xf9\x04\x01\x00\x00\x00\x00,\x00\x00\x00\x00\x01\x00\x01\x00\x00"
@@ -51,7 +57,17 @@ GIF = (
 )
 with open(os.path.join(FIXTURES, "multimodal", "rgb_420_20x14.jpg"), "rb") as _f:
     UNDECODED_IMAGES = {"jpeg": _f.read(), "gif": GIF}
-UNDECODED_AUDIO = {"mp3": _raw_wav(0x0055, 16, 2, bytes(64))}
+_KSDATAFORMAT_PCM = b"\x01\x00\x00\x00\x00\x00\x10\x00\x80\x00\x00\xaa\x00\x38\x9b\x71"
+UNDECODED_AUDIO = {
+    "mp3": _raw_wav(0x0055, 16, 2, bytes(64)),
+    "alaw": _raw_wav(0x0006, 8, 1, bytes(range(64))),
+    "mulaw": _raw_wav(0x0007, 8, 1, bytes(range(64))),
+    "ima_adpcm": _raw_wav(0x0011, 4, 36, bytes(72)),
+    "ms_adpcm": _raw_wav(0x0002, 4, 14, bytes(28)),
+    "extensible": _raw_wav(
+        0xFFFE, 16, 2, bytes(64), ext=struct.pack("<HHI", 22, 16, 0) + _KSDATAFORMAT_PCM
+    ),
+}
 
 
 # ---- cross-kind: recognized magic in the wrong row kind ----
@@ -124,9 +140,9 @@ def test_wav_block_align_mismatch_quarantines():
 
 
 def test_undecoded_formats_are_decode_unavailable():
-    """JPEG and GIF images and MP3-in-WAV payloads have no decoder
-    here: the pure decoders raise DecodeUnavailable, never CorruptImage
-    / CorruptAudio or a decode."""
+    """JPEG and GIF images and WAVs of any format tag but PCM and float
+    have no decoder here: the pure decoders raise DecodeUnavailable,
+    never CorruptImage / CorruptAudio or a decode."""
     for payload in UNDECODED_IMAGES.values():
         for decode in (M.decode_image, M._decode_rgb_array, lambda b: M.sample_frames(b, 2)):
             with pytest.raises(M.DecodeUnavailable):
@@ -157,7 +173,7 @@ def test_featurize_confusion_grid_lands_in_quarantine(spark):
         [(i, k, bytearray(c), None) for i, k, c, _ in rows],
         schema=M.MEDIA_SCHEMA_DDL,
     )
-    got = {r.media_id: r for r in M.featurize(df, partitions=2).collect()}
+    got = {r.media_id: r for r in M.featurize(df.repartition(2)).collect()}
     for media_id, _, _, want_err in rows:
         assert got[media_id].decode_error == want_err, media_id
         if want_err is None:
@@ -178,10 +194,10 @@ def test_undecoded_formats_through_the_stages(spark):
         [(i, k, bytearray(b), None) for i, (_, k, b) in enumerate(rows)],
         schema=M.MEDIA_SCHEMA_DDL,
     )
-    feats = {r.media_id: r for r in M.featurize(df, partitions=2).collect()}
+    feats = {r.media_id: r for r in M.featurize(df.repartition(2)).collect()}
     staged = {
         r.media_id: r.decode_error
-        for stage in (M.resize(df, 4, 4, partitions=2), M.envelope(df, n_windows=4))
+        for stage in (M.resize(df.repartition(2), 4, 4), M.envelope(df, n_windows=4))
         for r in stage.collect()
     }
     for i, (name, _, payload) in enumerate(rows):

@@ -129,7 +129,7 @@ def test_png_real_decode_in_distributed_path(spark):
     BMP/PPM/PNG; the PNG rows must produce REAL features (width/height
     prefix), not the digest fake, through the media kernel."""
     media = M.synth_media(spark, n=64)
-    feats = {r.media_id: r for r in M.featurize(media, partitions=4).collect()}
+    feats = {r.media_id: r for r in M.featurize(media.repartition(4)).collect()}
     png_rows = 0
     for i in range(64):
         if i % 16 and i % 3 == 0 and i % 13 != 0 and i % 5 == 0 and (i // 15) % 4 == 2:

@@ -5,7 +5,7 @@ from oct_report_ocr_spark.sources import multimodal
 
 def test_multimodal_featurize(spark):
     media = multimodal.synth_media(spark, n=64)
-    out = multimodal.featurize(media, partitions=8).collect()
+    out = multimodal.featurize(media.repartition(8)).collect()
     assert len(out) == 64
     ok = [r for r in out if r.decode_error is None]
     bad = [r for r in out if r.decode_error == "empty"]
@@ -15,7 +15,7 @@ def test_multimodal_featurize(spark):
     # features lead with (w, h, …, aspect) > 1 — distinguishable
     assert all(all(0.0 <= x <= 1.0 for x in r.feature) or r.feature[0] >= 1.0 for r in ok)
     # determinism: same payload → same sha/feature regardless of partitioning
-    again = {r.media_id: (r.content_sha256, r.feature) for r in multimodal.featurize(media, partitions=3).collect()}
+    again = {r.media_id: (r.content_sha256, r.feature) for r in multimodal.featurize(media.repartition(3)).collect()}
     for r in out:
         assert again[r.media_id] == (r.content_sha256, r.feature)
 
@@ -25,7 +25,7 @@ def test_multimodal_real_decode_in_distributed_path(spark):
     decoded rows carry true (w, h, mean-RGB) features, corrupt images
     land in quarantine, non-decodable kinds keep the fake path."""
     media = multimodal.synth_media(spark, n=64)
-    out = {r.media_id: r for r in multimodal.featurize(media, partitions=8).collect()}
+    out = {r.media_id: r for r in multimodal.featurize(media.repartition(8)).collect()}
     real = corrupt = 0
     for i in range(64):
         if not (i % 16) or i % 3:
@@ -80,7 +80,7 @@ def test_resize_image_nearest_neighbor_exact():
 
 def test_resize_distributed_with_quarantine(spark):
     media = multimodal.synth_media(spark, n=64)
-    out = {r.media_id: r for r in multimodal.resize(media, 4, 4, partitions=8).collect()}
+    out = {r.media_id: r for r in multimodal.resize(media.repartition(8), 4, 4).collect()}
     # only image rows appear
     assert all(i % 3 == 0 for i in out)
     real = corrupt = 0
@@ -112,7 +112,7 @@ def test_frame_sample_distributed(spark):
     per sampled frame (every_k incl. frame 0) with correct pixel bytes;
     corrupt containers and opaque payloads yield quarantine rows."""
     media = multimodal.synth_media(spark, n=64)
-    rows = multimodal.frame_sample(media, every_k=2, partitions=8).collect()
+    rows = multimodal.frame_sample(media.repartition(8), every_k=2).collect()
     by_id: dict = {}
     for r in rows:
         by_id.setdefault(r.media_id, []).append(r)
