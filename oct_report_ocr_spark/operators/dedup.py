@@ -690,29 +690,6 @@ def dup_pairs(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def _shuffle_totals(spark: SparkSession) -> tuple[int, int] | None:
-    """Cumulative (shuffle_read_bytes, shuffle_write_bytes) across all
-    completed stages, via the UI REST status store. None when the UI is
-    disabled (the default session) — callers treat stats as optional."""
-    try:
-        sc = spark.sparkContext
-        base = sc.uiWebUrl
-        if not base:
-            return None
-        import json as _json
-        import urllib.request
-
-        url = f"{base}/api/v1/applications/{sc.applicationId}/stages?status=complete"
-        with urllib.request.urlopen(url, timeout=5) as r:
-            stages = _json.load(r)
-        return (
-            sum(s.get("shuffleReadBytes", 0) for s in stages),
-            sum(s.get("shuffleWriteBytes", 0) for s in stages),
-        )
-    except Exception:  # noqa: BLE001 — metrics are best-effort
-        return None
-
-
 def components_from_pairs(
     spark: SparkSession, pairs: DataFrame, stats: list | None = None
 ) -> DataFrame:
@@ -760,7 +737,7 @@ def components_from_pairs(
     if stats is not None:
         stats.append({"n_edges": int(n_edges), "shuffle_partitions": parts})
     try:
-        stars = _cc_star_loop(spark, canon, stats=stats)
+        stars = _cc_star_loop(canon, stats=stats)
     finally:
         # unpersist inside the finally (ADVICE r03): a CC_MAX_ROUNDS
         # non-convergence raise must not leak the persisted edge list
@@ -819,9 +796,7 @@ def _small_star(e: DataFrame) -> DataFrame:
     return rehang.unionAll(self_edge).dropDuplicates(["a", "b"])
 
 
-def _cc_star_loop(
-    spark: SparkSession, edges: DataFrame, stats: list | None = None
-) -> DataFrame:
+def _cc_star_loop(edges: DataFrame, stats: list | None = None) -> DataFrame:
     """Alternating large-star/small-star iterations to the edge-set
     fixpoint (see ``components_from_pairs``); each iteration is
     materialized via localCheckpoint so the caller's scoped
@@ -832,16 +807,12 @@ def _cc_star_loop(
     composite map reached its fixpoint, which is one star per
     component (Kiveris et al. 2014, Thm 4: O(log² n) iterations; the
     measured constant is ~log₂ n — see tests/test_dedup_components.py).
-    ``stats`` (optional) collects per-iteration wall time and — when
-    the session runs with spark.ui.enabled=true — shuffle-byte deltas,
-    for the scale-behavior evidence (VERDICT r03 item 6)."""
-    import time as _time
-
+    ``stats`` (optional) collects one entry per iteration (its round
+    number, edge signature and whether it converged), so callers can
+    bound the round count."""
     e = edges.localCheckpoint(eager=True)
     prev = object()
     for _round in range(CC_MAX_ROUNDS):
-        t0 = _time.monotonic()
-        s0 = _shuffle_totals(spark) if stats is not None else None
         e = _small_star(_large_star(e)).localCheckpoint(eager=True)
         sig = e.agg(
             F.count(F.lit(1)).alias("n"),
@@ -849,13 +820,9 @@ def _cc_star_loop(
         ).collect()[0]
         metric = (sig["n"], sig["s"])
         if stats is not None:
-            s1 = _shuffle_totals(spark)
             stats.append(
                 {
                     "round": _round + 1,
-                    "seconds": round(_time.monotonic() - t0, 3),
-                    "shuffle_read_bytes": (s1[0] - s0[0]) if s0 and s1 else None,
-                    "shuffle_write_bytes": (s1[1] - s0[1]) if s0 and s1 else None,
                     "edge_signature": str(metric),
                     "converged": metric == prev,
                 }

@@ -10,17 +10,15 @@ resize / frame-sample as Arrow-batched stages.
 Decode kernels, all zero-external-dep (stdlib + numpy) and REAL:
 BMP (24bpp BI_RGB), binary PPM (P6), PNG (every valid IHDR shape:
 gray/RGB/palette/gray+alpha/RGBA, bit depths 1/2/4/8/16,
-non-interlaced and Adam7, full filter reconstruction incl. Paeth),
-WAV (RIFF PCM 8/16/24/32-bit and IEEE float 32/64-bit, real chunk
-walk) and the minimal FV01 video container. Every other format (JPEG,
-GIF, WebP, any other WAVE format tag incl. G.711, ADPCM and
-WAVE_FORMAT_EXTENSIBLE, MP3/AAC/Opus, real video codecs) raises
-``DecodeUnavailable``: featurize falls back to a
-deterministic digest fake, the other stages quarantine the row. A
-recognized magic in a row of the wrong kind (a WAV in an image row, a
-PNG, GIF or JPEG in an audio row) quarantines as
-CorruptImage/CorruptAudio. The four Spark stages (featurize, resize,
-frame_sample, envelope) share one mapInArrow kernel, ``_media_stage``.
+non-interlaced and Adam7, full filter reconstruction incl. Paeth) and
+the minimal FV01 video container. Audio is not decoded: audio rows,
+like undecoded video, take featurize's deterministic digest fake.
+Every other image or video format (JPEG, GIF, WebP, real video
+codecs) raises ``DecodeUnavailable``: featurize falls back to the
+digest fake, the other stages quarantine the row. Malformed BMP, PPM,
+PNG or FV01 payloads, and a RIFF/WAVE payload in an image row, raise
+``CorruptImage``. The three Spark stages (featurize, resize,
+frame_sample) share one mapInArrow kernel, ``_media_stage``.
 """
 
 from __future__ import annotations
@@ -43,8 +41,8 @@ FEATURE_DDL = (
     "media_id long, kind string, n_bytes long, content_sha256 string, "
     "feature array<float>, decode_error string"
 )
-# length of every feature vector: real image / audio features pad or
-# cut to it, the digest fake takes this many digest bytes
+# length of every feature vector: real image features pad or cut to
+# it, the digest fake takes this many digest bytes
 FEATURE_DIM = 8
 
 
@@ -57,17 +55,13 @@ class CorruptImage(ValueError):
     malformed — lands in decode_error quarantine (D9)."""
 
 
-class CorruptAudio(ValueError):
-    """Audio twin of CorruptImage: claims RIFF/WAVE but is malformed."""
-
-
-def _decode_bmp(b: bytes) -> tuple[int, int, float, float, float]:
-    """Uncompressed 24-bpp BI_RGB BMP → (width, height, mean RGB).
-
-    Pure stdlib (struct + memoryview slicing): rows are bottom-up and
-    padded to 4 bytes; pixels are BGR. Channel means use strided
-    slices, so cost is O(pixels) with no Python per-pixel loop."""
+def _decode_bmp(b: bytes):
+    """Uncompressed 24-bpp BI_RGB BMP → (h, w, 3) uint8 RGB view of the
+    payload. Validates the header and size; rows are bottom-up and
+    padded to 4 bytes and pixels are BGR, so the view flips both."""
     import struct
+
+    import numpy as np
 
     if len(b) < 54:
         raise CorruptImage("bmp: truncated header")
@@ -87,20 +81,16 @@ def _decode_bmp(b: bytes) -> tuple[int, int, float, float, float]:
     stride = (3 * w + 3) & ~3
     if pix_off + stride * h > len(b):
         raise CorruptImage("bmp: pixel array truncated")
-    sums = [0, 0, 0]  # B, G, R
-    mv = memoryview(b)
-    for row in range(h):
-        base = pix_off + row * stride
-        line = mv[base : base + 3 * w]
-        for c in range(3):
-            sums[c] += sum(line[c::3])
-    n = w * h
-    return w, h, sums[2] / n / 255.0, sums[1] / n / 255.0, sums[0] / n / 255.0
+    rows = np.frombuffer(b, dtype=np.uint8, count=stride * h, offset=pix_off)
+    return rows.reshape(h, stride)[::-1, : 3 * w].reshape(h, w, 3)[:, :, ::-1]
 
 
-def _decode_ppm(b: bytes) -> tuple[int, int, float, float, float]:
-    """Binary PPM (P6, maxval 255) → (width, height, mean RGB)."""
+def _decode_ppm(b: bytes):
+    """Binary PPM (P6, maxval 255) → (h, w, 3) uint8 RGB view of the
+    payload, after validating the header and size."""
     import re as _re
+
+    import numpy as np
 
     m = _re.match(rb"P6\s+(?:#[^\n]*\n\s*)*(\d+)\s+(\d+)\s+(\d+)\s", b)
     if not m:
@@ -110,17 +100,9 @@ def _decode_ppm(b: bytes) -> tuple[int, int, float, float, float]:
         raise DecodeUnavailable("ppm: only maxval 255 supported")
     if w <= 0 or h <= 0 or w * h > 64_000_000:
         raise CorruptImage("ppm: implausible dimensions")
-    pix = memoryview(b)[m.end() : m.end() + 3 * w * h]
-    if len(pix) < 3 * w * h:
+    if len(b) - m.end() < 3 * w * h:
         raise CorruptImage("ppm: pixel array truncated")
-    n = w * h
-    return (
-        w,
-        h,
-        sum(pix[0::3]) / n / 255.0,
-        sum(pix[1::3]) / n / 255.0,
-        sum(pix[2::3]) / n / 255.0,
-    )
+    return np.frombuffer(b, dtype=np.uint8, count=3 * w * h, offset=m.end()).reshape(h, w, 3)
 
 
 _PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
@@ -311,33 +293,25 @@ def _png_raster(b: bytes):
     return w, h, color, px
 
 
-def _decode_png(b: bytes) -> tuple[int, int, float, float, float]:
-    """PNG → (width, height, mean RGB), same feature contract as the
-    BMP/PPM kernels. Gray / gray+alpha replicate the gray mean across
-    channels; alpha is ignored; palette means are over mapped RGB."""
-    w, h, _, arr = _png_raster(b)
-    if arr.shape[2] <= 2:
-        m = float(arr[:, :, 0].mean()) / 255.0
-        return w, h, m, m, m
-    means = arr[:, :, :3].mean(axis=(0, 1)) / 255.0
-    return w, h, float(means[0]), float(means[1]), float(means[2])
+def _decode_rgb_array(b: bytes):
+    """The one image decoder: BMP (24bpp BI_RGB) / PPM (P6) / PNG (every
+    valid IHDR shape) → (h, w, 3) uint8 RGB numpy array, vectorized
+    (frombuffer + strided views), no Python per-pixel loop. Gray and
+    gray+alpha replicate to RGB, alpha is dropped, palettes are already
+    mapped. Malformed BMP/PPM/PNG raise CorruptImage; every other
+    format (JPEG, GIF, WebP, ...) raises DecodeUnavailable."""
+    import numpy as np
 
-
-def decode_image(content: bytes) -> tuple[int, int, float, float, float]:
-    """Real image decode: zero-external-dep kernels for uncompressed BMP
-    (24bpp BI_RGB), binary PPM (P6) and PNG (every valid IHDR shape)
-    → (width, height, mean_r, mean_g, mean_b). Every other format
-    (JPEG, GIF, WebP, ...) raises DecodeUnavailable; malformed
-    BMP/PPM/PNG raise CorruptImage. The Spark-side stages choose what
-    each class means (featurize falls back to the digest fake on
-    DecodeUnavailable, resize quarantines both)."""
-    if content[:2] == b"BM":
-        return _decode_bmp(content)
-    if content[:2] == b"P6":
-        return _decode_ppm(content)
-    if content[:8] == _PNG_MAGIC:
-        return _decode_png(content)
-    if _sniff_kind(content) == "audio":
+    if b[:2] == b"BM":
+        return _decode_bmp(b)
+    if b[:2] == b"P6":
+        return _decode_ppm(b)
+    if b[:8] == _PNG_MAGIC:
+        _, _, _, arr = _png_raster(b)
+        if arr.shape[2] <= 2:
+            return np.repeat(arr[:, :, :1], 3, axis=2)
+        return arr[:, :, :3]
+    if b[:4] == b"RIFF" and b[8:12] == b"WAVE":
         # cross-kind confusion (VERDICT r04 item 7): a recognized WAV in
         # an image row is mislabeled data, not a missing codec — it must
         # quarantine, never fall through to the fake-feature path
@@ -345,21 +319,15 @@ def decode_image(content: bytes) -> tuple[int, int, float, float, float]:
     raise DecodeUnavailable("image codec libraries not present in this environment")
 
 
-def _sniff_kind(b: bytes) -> str | None:
-    """Best-effort media-kind sniff over well-known magics — used only
-    to catch cross-kind mislabeling (a WAV in an image row, a PNG, GIF
-    or JPEG in an audio row). JPEG and GIF count as images even though
-    decode_image does not decode them. Unknown magics return None and
-    keep the honest DecodeUnavailable path."""
-    if (
-        b[:2] in (b"BM", b"P6", b"\xff\xd8")
-        or b[:8] == _PNG_MAGIC
-        or b[:6] in (b"GIF87a", b"GIF89a")
-    ):
-        return "image"
-    if b[:4] == b"RIFF" and b[8:12] == b"WAVE":
-        return "audio"
-    return None
+def decode_image(content: bytes) -> tuple[int, int, float, float, float]:
+    """Real image decode → (width, height, mean_r, mean_g, mean_b), the
+    channel means of ``_decode_rgb_array`` scaled to [0, 1]. Raises what
+    that decoder raises; the Spark-side stages choose what each class
+    means (featurize falls back to the digest fake on DecodeUnavailable,
+    resize quarantines both)."""
+    arr = _decode_rgb_array(content)
+    h, w = arr.shape[:2]
+    return (w, h, *(float(m) for m in arr.mean(axis=(0, 1)) / 255.0))
 
 
 def image_feature(content: bytes) -> list[float]:
@@ -435,16 +403,14 @@ def _media_stage(
 
 
 def _feature(kind: str, b: bytes) -> list[tuple]:
-    """featurize's per-payload step: the real decode for image and audio
-    rows, the digest fake for other kinds and for codecs not decoded
-    here (DecodeUnavailable)."""
-    try:
-        if kind == "image":
+    """featurize's per-payload step: the real decode for image rows, the
+    digest fake for other kinds and for codecs not decoded here
+    (DecodeUnavailable)."""
+    if kind == "image":
+        try:
             return [(image_feature(b),)]
-        if kind == "audio":
-            return [(audio_feature(b),)]
-    except DecodeUnavailable:
-        pass
+        except DecodeUnavailable:
+            pass
     return [(fake_feature(b),)]
 
 
@@ -465,55 +431,28 @@ def featurize(media: DataFrame) -> DataFrame:
     )
 
 
-def _decode_rgb_array(b: bytes):
-    """Decode BMP (24bpp BI_RGB) / PPM (P6) / PNG to an (h, w, 3) uint8 RGB
-    numpy array — vectorized (frombuffer + strided reshape), no Python
-    per-pixel loop. Shares validation with the mean-RGB kernels."""
-    import struct
-
-    import numpy as np
-
-    if b[:2] == b"P6":
-        w, h, _, _, _ = _decode_ppm(b)  # validates header + size
-        import re as _re
-
-        m = _re.match(rb"P6\s+(?:#[^\n]*\n\s*)*(\d+)\s+(\d+)\s+(\d+)\s", b)
-        pix = np.frombuffer(b, dtype=np.uint8, count=3 * w * h, offset=m.end())
-        return pix.reshape(h, w, 3)
-    if b[:2] == b"BM":
-        w, h, _, _, _ = _decode_bmp(b)  # validates header + size
-        (pix_off,) = struct.unpack_from("<I", b, 10)
-        stride = (3 * w + 3) & ~3
-        rows = np.frombuffer(
-            b, dtype=np.uint8, count=stride * h, offset=pix_off
-        ).reshape(h, stride)
-        # bottom-up rows, BGR channel order → top-down RGB
-        return rows[::-1, : 3 * w].reshape(h, w, 3)[:, :, ::-1]
-    if b[:8] == _PNG_MAGIC:
-        _, _, _, arr = _png_raster(b)
-        if arr.shape[2] <= 2:  # gray / gray+alpha → replicate to RGB
-            return np.repeat(arr[:, :, :1], 3, axis=2)
-        return arr[:, :, :3]  # RGBA drops alpha; palette already mapped
-    raise DecodeUnavailable("image codec libraries not present in this environment")
-
-
 def _encode_ppm(arr) -> bytes:
     """(h, w, 3) uint8 RGB array → binary P6 PPM bytes."""
     h, w = arr.shape[0], arr.shape[1]
     return f"P6\n{w} {h}\n255\n".encode() + arr.tobytes()
 
 
-def resize_image(content: bytes, out_w: int, out_h: int) -> bytes:
-    """Real nearest-neighbor resize: decode (BMP/PPM/PNG) → integer index
-    resample via numpy fancy indexing → re-encode as P6 PPM. Pure
-    numpy — O(out pixels), vectorized, deterministic."""
+def _resample(arr, out_w: int, out_h: int) -> bytes:
+    """Nearest-neighbor resample of an (h, w, 3) RGB array by integer
+    index via numpy fancy indexing → P6 PPM bytes. O(out pixels),
+    vectorized, deterministic."""
     import numpy as np
 
-    arr = _decode_rgb_array(content)
     h, w = arr.shape[0], arr.shape[1]
     rows = (np.arange(out_h) * h) // out_h
     cols = (np.arange(out_w) * w) // out_w
     return _encode_ppm(arr[rows][:, cols])
+
+
+def resize_image(content: bytes, out_w: int, out_h: int) -> bytes:
+    """Real nearest-neighbor resize: decode (BMP/PPM/PNG), resample,
+    re-encode as P6 PPM."""
+    return _resample(_decode_rgb_array(content), out_w, out_h)
 
 
 RESIZE_DDL = (
@@ -527,8 +466,8 @@ def resize(media: DataFrame, out_w: int, out_h: int) -> DataFrame:
     (out_w, out_h) P6 PPM, with per-row quarantine."""
 
     def decode(_kind: str, b: bytes) -> list[tuple]:
-        w, h, *_ = decode_image(b)
-        return [(w, h, out_w, out_h, resize_image(b, out_w, out_h))]
+        arr = _decode_rgb_array(b)
+        return [(arr.shape[1], arr.shape[0], out_w, out_h, _resample(arr, out_w, out_h))]
 
     return _media_stage(media, RESIZE_DDL, decode, kind="image")
 
@@ -594,199 +533,6 @@ def frame_sample(media: DataFrame, every_k: int = 2) -> DataFrame:
     return _media_stage(
         media, FRAME_DDL, lambda _kind, b: sample_frames(b, every_k), kind="video"
     )
-
-
-# --------------------------------------------------------------------------
-# Audio decode, pure stdlib + numpy: WAV (RIFF PCM / IEEE float). Every
-# other WAVE format tag (G.711, ADPCM, WAVE_FORMAT_EXTENSIBLE, MP3, ...)
-# and every non-WAV payload (MP3, AAC, Opus) raises DecodeUnavailable.
-# --------------------------------------------------------------------------
-
-# WAVE format tags (RIFF spec): the two this module decodes
-_WAV_PCM, _WAV_FLOAT = 0x0001, 0x0003
-
-ENVELOPE_DDL = (
-    "media_id long, sample_rate int, channels int, n_frames long, "
-    "duration_s double, envelope array<float>, decode_error string"
-)
-
-
-def _wav_samples(b: bytes):
-    """Parse a RIFF/WAVE payload → (sample_rate, channels, samples)
-    where samples is an (n_frames, channels) float64 array in [-1, 1].
-
-    Real chunk walk (fmt/data found by iteration, unknown chunks
-    skipped, word-aligned sizes honored) — not an offset guess. PCM
-    8/16/24/32-bit and IEEE float 32/64-bit only. Malformed structure
-    raises CorruptAudio; every other format tag (G.711, ADPCM,
-    WAVE_FORMAT_EXTENSIBLE, MP3-in-WAV, ...) and every non-WAV codec
-    (MP3/AAC/Opus) raises DecodeUnavailable."""
-    import struct
-
-    import numpy as np
-
-    if len(b) < 12 or b[:4] != b"RIFF" or b[8:12] != b"WAVE":
-        if _sniff_kind(b) == "image":
-            # cross-kind confusion (VERDICT r04 item 7): a recognized
-            # image in an audio row is mislabeled data — quarantine,
-            # never the fake-feature fallback
-            raise CorruptAudio("audio row holds an image payload")
-        # not a WAV at all (MP3/Opus/... — codecs absent from this
-        # container); same convention as decode_image's unknown-magic path
-        raise DecodeUnavailable("audio codec libraries not present in this environment")
-    fmt = data = None
-    off = 12
-    while off + 8 <= len(b):
-        tag = b[off : off + 4]
-        (size,) = struct.unpack_from("<I", b, off + 4)
-        body = off + 8
-        if body + size > len(b):
-            raise CorruptAudio(f"wav: chunk {tag!r} truncated")
-        if tag == b"fmt ":
-            fmt = b[body : body + size]
-        elif tag == b"data":
-            data = b[body : body + size]
-        off = body + size + (size & 1)  # chunks are word-aligned
-    if fmt is None or data is None:
-        raise CorruptAudio("wav: missing fmt/data chunk")
-    if len(fmt) < 16:
-        raise CorruptAudio("wav: fmt chunk too short")
-    tag, channels, rate, _brate, block_align, bits = struct.unpack_from("<HHIIHH", fmt, 0)
-    if tag not in (_WAV_PCM, _WAV_FLOAT):
-        raise DecodeUnavailable(f"wav: codec 0x{tag:04x} not supported (PCM/float only)")
-    if channels == 0 or rate == 0:
-        raise CorruptAudio("wav: zero channels or sample rate")
-    if tag == _WAV_PCM and bits not in (8, 16, 24, 32):
-        raise DecodeUnavailable(f"wav: {bits}-bit PCM not supported")
-    if tag == _WAV_FLOAT and bits not in (32, 64):
-        raise DecodeUnavailable(f"wav: {bits}-bit float not supported")
-    frame_bytes = channels * (bits // 8)
-    if block_align and block_align != frame_bytes:
-        raise CorruptAudio("wav: block align disagrees with channels*bits")
-    if len(data) % frame_bytes:
-        raise CorruptAudio("wav: data size not a whole number of frames")
-    n = len(data) // (bits // 8)
-    if tag == _WAV_FLOAT:
-        arr = np.frombuffer(data, dtype="<f4" if bits == 32 else "<f8", count=n).astype(np.float64)
-    elif bits == 8:  # 8-bit PCM is unsigned, midpoint 128
-        arr = (np.frombuffer(data, dtype=np.uint8, count=n).astype(np.float64) - 128.0) / 128.0
-    elif bits == 24:  # sign-extend 3-byte little-endian into int32
-        raw = np.frombuffer(data, dtype=np.uint8).reshape(-1, 3).astype(np.uint32)
-        vals = (raw[:, 0] | (raw[:, 1] << 8) | (raw[:, 2] << 16)).astype(np.int32)
-        vals = np.where(vals >= 1 << 23, vals - (1 << 24), vals)
-        arr = vals.astype(np.float64) / float(1 << 23)
-    else:
-        dt = np.int16 if bits == 16 else np.int32
-        arr = np.frombuffer(data, dtype=np.dtype(dt).newbyteorder("<"), count=n).astype(
-            np.float64
-        ) / float(1 << (bits - 1))
-    return rate, channels, arr.reshape(-1, channels)
-
-
-def decode_audio(content: bytes) -> tuple[int, int, int, float, float, float, float]:
-    """Real audio decode → (sample_rate, channels, n_frames, duration_s,
-    rms, peak, zero_crossing_rate). Amplitude stats are over all
-    channels in [-1, 1]; the zero-crossing rate is of the mono mix —
-    all O(samples) vectorized numpy, no Python per-sample loop."""
-    import numpy as np
-
-    rate, channels, samples = _wav_samples(content)
-    n_frames = samples.shape[0]
-    if n_frames == 0:
-        return rate, channels, 0, 0.0, 0.0, 0.0, 0.0
-    rms = float(np.sqrt(np.mean(samples * samples)))
-    peak = float(np.max(np.abs(samples)))
-    mono = samples.mean(axis=1)
-    zcr = float(np.mean(np.signbit(mono[1:]) != np.signbit(mono[:-1]))) if n_frames > 1 else 0.0
-    return rate, channels, n_frames, n_frames / rate, rms, peak, zcr
-
-
-def audio_feature(content: bytes) -> list[float]:
-    """Feature vector from a really-decoded audio payload: [sample_rate,
-    channels, n_frames, duration_s, rms, peak, zcr, 0] — same
-    deterministic byte-stable contract as image_feature (leads with a
-    value ≥ 1, so it is distinguishable from the digest fake)."""
-    rate, ch, n, dur, rms, peak, zcr = decode_audio(content)
-    out = [float(rate), float(ch), float(n), dur, rms, peak, zcr]
-    return (out + [0.0] * FEATURE_DIM)[:FEATURE_DIM]
-
-
-def audio_envelope(content: bytes, n_windows: int) -> tuple[int, int, int, list[float]]:
-    """Per-window RMS envelope of the mono mix → (sample_rate, channels,
-    n_frames, envelope). The audio analogue of resize_image: a fixed-
-    size downsampled representation regardless of payload length.
-    Window boundaries use the same integer split as the nearest-
-    neighbor resampler, so it is exact and deterministic."""
-    import numpy as np
-
-    rate, channels, samples = _wav_samples(content)
-    n = samples.shape[0]
-    if n == 0:
-        return rate, channels, 0, [0.0] * n_windows
-    mono2 = (samples.mean(axis=1)) ** 2
-    bounds = (np.arange(n_windows + 1) * n) // n_windows
-    csum = np.concatenate(([0.0], np.cumsum(mono2)))
-    widths = np.maximum(bounds[1:] - bounds[:-1], 1)
-    env = np.sqrt((csum[np.minimum(bounds[1:], n)] - csum[bounds[:-1]]) / widths)
-    return rate, channels, n, [float(x) for x in env]
-
-
-def envelope(media: DataFrame, n_windows: int = 16) -> DataFrame:
-    """Distributed audio-envelope stage (the audio analogue of resize):
-    per-window RMS envelope of the audio rows, with per-row quarantine."""
-
-    def decode(_kind: str, b: bytes) -> list[tuple]:
-        rate, ch, n, env = audio_envelope(b, n_windows)
-        return [(rate, ch, n, n / rate, env)]
-
-    return _media_stage(media, ENVELOPE_DDL, decode, kind="audio")
-
-
-def make_wav(
-    n_frames: int,
-    rate: int = 16000,
-    channels: int = 1,
-    seed: int = 0,
-    bits: int = 16,
-    fmt: str = "pcm",
-) -> bytes:
-    """Deterministic WAV encoder for tests: sample s of channel c is the
-    closed-form ramp ((seed + 7*s + 3*c) % 509 - 254) / 254, quantized
-    to the target width — so every decode has an exact ground truth.
-    fmt: "pcm" (8/16/24/32 per ``bits``) or "float" (32/64)."""
-    import struct
-
-    import numpy as np
-
-    s = np.arange(n_frames)[:, None]
-    c = np.arange(channels)[None, :]
-    vals = ((seed + 7 * s + 3 * c) % 509 - 254) / 254.0  # in [-1, 1]
-    if fmt == "float":
-        data = vals.astype("<f4" if bits == 32 else "<f8").tobytes()
-        tag = _WAV_FLOAT
-    elif bits == 8:
-        data = (np.round(vals * 127) + 128).astype(np.uint8).tobytes()
-        tag = _WAV_PCM
-    elif bits == 24:
-        ints = np.round(vals * ((1 << 23) - 1)).astype(np.int32)
-        u = ints.astype(np.uint32) & 0xFFFFFF
-        flat = u.reshape(-1)
-        data = np.stack(
-            [flat & 0xFF, (flat >> 8) & 0xFF, (flat >> 16) & 0xFF], axis=1
-        ).astype(np.uint8).tobytes()
-        tag = _WAV_PCM
-    else:
-        lim = (1 << (bits - 1)) - 1
-        dt = np.int16 if bits == 16 else np.int32
-        data = np.round(vals * lim).astype(np.dtype(dt).newbyteorder("<")).tobytes()
-        tag = _WAV_PCM
-    block = channels * (bits // 8)
-    fmt_body = struct.pack("<HHIIHH", tag, channels, rate, rate * block, block, bits)
-    chunks = (
-        b"fmt " + struct.pack("<I", len(fmt_body)) + fmt_body
-        + b"data" + struct.pack("<I", len(data)) + data + (b"\x00" if len(data) & 1 else b"")
-    )
-    return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
 
 
 def make_bmp(w: int, h: int, seed: int = 0) -> bytes:
@@ -912,7 +658,6 @@ def make_png(
 
 # synth_media's rotations, shared with the tests that check its rows
 SYNTH_IMAGE_MAKERS = (make_bmp, make_ppm, make_png)
-SYNTH_WAV_FORMATS = ((8, "pcm"), (16, "pcm"), (24, "pcm"), (32, "float"))
 SYNTH_VIDEO_MAKERS = (make_fvid,)
 
 
@@ -921,11 +666,9 @@ def synth_media(spark, n: int = 64):
     deliberately skewed, one empty payload per 16). Every 5th image row
     carries a REAL decodable payload (rotating BMP/PPM/PNG) so the
     real decode kernel is exercised in the distributed path; every 13th
-    image row is a corrupt BMP (quarantine path). Audio rows mirror the
-    scheme with WAV payloads (rotating 8/16/24-bit PCM and 32-bit float
-    / truncated-chunk corrupt / opaque bytes), and video rows with FV01
-    containers (real frame-sample path / corrupt container / opaque
-    bytes)."""
+    image row is a corrupt BMP (quarantine path). Video rows mirror the
+    scheme with FV01 containers (real frame-sample path / corrupt
+    container / opaque bytes); audio rows carry the opaque bytes only."""
     rows = []
     for i in range(n):
         size = (i * 977) % 4096 + (8192 if i % 11 == 0 else 0)
@@ -936,16 +679,6 @@ def synth_media(spark, n: int = 64):
             elif i % 5 == 0:
                 maker = SYNTH_IMAGE_MAKERS[(i // 15) % len(SYNTH_IMAGE_MAKERS)]
                 payload = maker(8 + i % 16, 4 + i % 8, seed=i)
-        if i % 16 and i % 3 == 1:  # kind == "audio" rows
-            if i % 13 == 0:
-                # corrupt: claims RIFF/WAVE but the data chunk is truncated
-                payload = make_wav(64, seed=i)[:40]
-            elif i % 5 == 0:
-                bits, fmt = SYNTH_WAV_FORMATS[(i // 15) % len(SYNTH_WAV_FORMATS)]
-                payload = make_wav(
-                    32 + i * 3, rate=8000 + 100 * i, channels=1 + i % 2,
-                    seed=i, bits=bits, fmt=fmt,
-                )
         if i % 16 and i % 3 == 2:  # kind == "video" rows
             if i % 13 == 0:
                 # corrupt: claims FV01 but frame data truncated

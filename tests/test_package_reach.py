@@ -10,9 +10,9 @@ module no root reaches is code that only its own tests run; delete it
 rather than let it grow back.
 
 ``KNOWN_UNREACHED`` names the one such module still in the package,
-``sources.multimodal`` (the media decode kernels and their four Spark
-stages): its own tests are 144 ids, and their removal is left to a
-change of its own. The list may only shrink: the test fails on a new
+``sources.multimodal`` (the image and FV01 decode kernels and their
+three Spark stages): ROADMAP direction 2 plans its removal, with its
+own tests, in slices. The list may only shrink: the test fails on a new
 unreached module and on a listed one that is gone or reached.
 """
 

@@ -21,7 +21,13 @@ def test_bmp_roundtrip(whs):
     w, h, seed = whs
     gw, gh, r, g, b = decode_image(make_bmp(w, h, seed=seed))
     assert (gw, gh) == (w, h)
-    assert all(0.0 <= x <= 1.0 for x in (r, g, b))
+    # make_bmp stores channel byte c (B, G, R) of pixel (row, col) as
+    # (seed + 7*row + 3*col + c) % 256: exact sums in a Python loop
+    sums = [
+        sum((seed + 7 * row + 3 * col + c) % 256 for row in range(h) for col in range(w))
+        for c in range(3)
+    ]
+    assert (r, g, b) == tuple(s / (w * h) / 255.0 for s in sums[::-1])
 
 
 @given(dims)
@@ -30,7 +36,9 @@ def test_ppm_roundtrip(whs):
     w, h, seed = whs
     gw, gh, r, g, b = decode_image(make_ppm(w, h, seed=seed))
     assert (gw, gh) == (w, h)
-    assert all(0.0 <= x <= 1.0 for x in (r, g, b))
+    # make_ppm's sample i is (seed + i) % 256, channel i % 3 (R, G, B)
+    sums = [sum((seed + i) % 256 for i in range(c, 3 * w * h, 3)) for c in range(3)]
+    assert (r, g, b) == tuple(s / (w * h) / 255.0 for s in sums)
 
 
 @given(dims, st.integers(1, 40))
